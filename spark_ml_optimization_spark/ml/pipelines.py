@@ -532,8 +532,10 @@ def ml12_pipeline_cv(spark: SparkSession, sf_dir: str) -> DataFrame:
         parallelism=4,
         seed=42,
     )
-    model = _fit_retry(cv, data)
-    data.unpersist()
+    try:
+        model = _fit_retry(cv, data)
+    finally:
+        data.unpersist()
     best = max(range(len(grid)), key=lambda i: model.avgMetrics[i])
     rows = [
         (

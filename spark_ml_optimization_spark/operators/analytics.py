@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import register
+from ..session import scoped_conf
 from ..sources import load_table
 
 def _rev():
@@ -953,11 +954,10 @@ def qa22_cbo_join_reorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     cats = analyze_tables(
         spark, sf_dir, ("region", "nation", "customer", "orders", "lineitem")
     )
-    prev_cbo = spark.conf.get("spark.sql.cbo.enabled")
-    prev_jr = spark.conf.get("spark.sql.cbo.joinReorder.enabled")
-    spark.conf.set("spark.sql.cbo.enabled", "true")
-    spark.conf.set("spark.sql.cbo.joinReorder.enabled", "true")
-    try:
+    with scoped_conf(
+        spark,
+        {"spark.sql.cbo.enabled": "true", "spark.sql.cbo.joinReorder.enabled": "true"},
+    ):
         df = spark.sql(
             f"""
             SELECT r_name,
@@ -976,9 +976,6 @@ def qa22_cbo_join_reorder(spark: SparkSession, sf_dir: str) -> DataFrame:
         # cost-reordered plan after the confs are restored below.
         df._jdf.queryExecution().executedPlan()
         return df
-    finally:
-        spark.conf.set("spark.sql.cbo.enabled", prev_cbo)
-        spark.conf.set("spark.sql.cbo.joinReorder.enabled", prev_jr)
 
 
 @register(

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import _REGISTRY, register
+from ..session import scoped_conf
 from ..sources import load_table, spread
 
 
@@ -2552,15 +2553,11 @@ def q84g_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The strong graph is tiny (~4-6 k edges at any tested sf): 32-way
     # shuffles would be pure scheduling overhead for the per-round
     # join/agg/window chain, so the rounds run at 8 partitions
-    # (set/restore guard, the qa22/q48c convention).  At 100 TB the
+    # (scoped_conf, the qa22/q48c convention).  At 100 TB the
     # substrate grows and this knob simply isn't lowered.
     strong_copurchase_edges(spark, sf_dir)  # build at full parallelism
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions", "32")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with scoped_conf(spark, {"spark.sql.shuffle.partitions": "8"}):
         return _lpa_rounds(spark, sf_dir)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
 
 
 def _lpa_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..registry import register
+from ..session import scoped_conf
 from ..sources import load_table
 
 
@@ -788,7 +789,7 @@ def src20_python_datasource_writer(spark: SparkSession, sf_dir: str) -> DataFram
     "truncate the whole table first — the oracle distinguishes the "
     "two because every non-error partition must survive byte-for-byte "
     "(id sums + distinct users per partition, all exact integers).  "
-    "Conf is set/restored in a try/finally (the qa22 convention).  "
+    "The conf is scoped to the overwrite (session.scoped_conf).  "
     "Scale: the overwrite job touches only the replaced partitions' "
     "files; untouched partitions are never read or rewritten — the "
     "O(delta) backfill that makes daily reprocessing affordable at "
@@ -808,15 +809,10 @@ def src21_dynamic_partition_overwrite(
         )
         .withColumn("event_id", F.col("event_id") + 1000000)
     )
-    key = "spark.sql.sources.partitionOverwriteMode"
-    prev = spark.conf.get(key, "STATIC")
-    try:
-        spark.conf.set(key, "dynamic")
+    with scoped_conf(spark, {"spark.sql.sources.partitionOverwriteMode": "dynamic"}):
         correction.write.mode("overwrite").partitionBy("event_type").parquet(
             path
         )
-    finally:
-        spark.conf.set(key, prev)
     back = spark.read.parquet(path)
     return back.groupBy("event_type").agg(
         F.count("*").alias("n_rows"),

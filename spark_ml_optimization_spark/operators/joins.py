@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import register
+from ..session import scoped_conf
 from ..sources import load_table
 
 
@@ -385,15 +386,13 @@ def q10c_bloom_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("o_orderpriority") == "1-URGENT") & (F.col("o_orderstatus") == "F")
     )
     l = load_table(spark, sf_dir, "lineitem")
-    prev_app = spark.conf.get(
-        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold"
-    )
-    prev_bc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set(
-        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold", "0"
-    )
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
+    with scoped_conf(
+        spark,
+        {
+            "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "0",
+            "spark.sql.autoBroadcastJoinThreshold": "-1",
+        },
+    ):
         cents = F.round(F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100).cast(
             "long"
         )
@@ -410,12 +409,6 @@ def q10c_bloom_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         # keeps the runtime-filtered plan after the confs are restored.
         df._jdf.queryExecution().executedPlan()
         return df
-    finally:
-        spark.conf.set(
-            "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
-            prev_app,
-        )
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev_bc)
 
 
 @register(

@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from ..registry import register
+from ..session import scoped_conf
 from ..sources import register_views
 
 
@@ -314,9 +315,7 @@ def q18c_identifier_clause(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q18d_sql_scripting(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir)
-    prev = spark.conf.get("spark.sql.scripting.enabled")
-    spark.conf.set("spark.sql.scripting.enabled", "true")
-    try:
+    with scoped_conf(spark, {"spark.sql.scripting.enabled": "true"}):
         return spark.sql(
             """
             BEGIN
@@ -335,8 +334,6 @@ def q18d_sql_scripting(spark: SparkSession, sf_dir: str) -> DataFrame:
             END
             """
         )
-    finally:
-        spark.conf.set("spark.sql.scripting.enabled", prev)
 
 
 @register(

@@ -10,6 +10,7 @@ from __future__ import annotations
 import os
 import tempfile
 import zipfile
+from contextlib import contextmanager
 from pathlib import Path
 
 from pyspark.sql import SparkSession
@@ -31,6 +32,9 @@ RUNTIME_CONFS = {
     # ANSI off: TPC-H-ish fixtures contain no edge cases that need it and
     # non-ANSI matches DuckDB's permissive casts more closely.
     "spark.sql.ansi.enabled": "false",
+    # Lets the vectorized reader accept a TIMESTAMP(NANOS) ``events.ts``
+    # (read as LongType, see sources/io.py); harmless on a micros fixture.
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
 }
 
 
@@ -89,6 +93,25 @@ def configure(spark: SparkSession) -> SparkSession:
             pass
     _ship_package(spark)
     return spark
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, confs: dict[str, str]):
+    """Set ``confs`` on ``spark`` for the ``with`` body, then restore each
+    key's previous value, or unset it if the session had none — the
+    contract of PySpark's ``SQLTestUtils.sql_conf``.  The only way
+    package code changes session conf outside this module."""
+    old = {k: spark.conf.get(k, None) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def get_spark(app_name: str = "spark_ml_optimization_spark") -> SparkSession:

@@ -83,9 +83,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """
     configure(spark)
     path = table_path(sf_dir, name)
-    if name == "events":
-        # Harmless when ts is already µs; required to read a nanos fixture.
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     cached = _SCHEMA_CACHE.get(path)
     if cached is not None:
         df = spark.read.schema(cached).parquet(path)

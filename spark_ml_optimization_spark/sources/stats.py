@@ -24,7 +24,7 @@ from ..session import configure
 from .io import table_path
 
 #: Analyzable fixture tables.  `events` is excluded: its TIMESTAMP(NANOS)
-#: column needs the session-level nanosAsLong rewrite (sources/io.py) and
+#: column needs the session-level nanosAsLong read (session.RUNTIME_CONFS) and
 #: would land in the catalog with the raw long schema.
 ANALYZABLE = (
     "region",

@@ -24,15 +24,18 @@ uses foreachBatch → parquet/Delta (st05 append, st13 keyed upsert).
 from __future__ import annotations
 
 import os
+import shutil
 import tempfile
 import uuid
+from collections.abc import Sequence
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..registry import register
-from ..session import configure
+from ..session import configure, scoped_conf
 from ..sources.io import normalize_events_ts
 
 #: Explicit read schemas per fixture dir — streaming sources never
@@ -44,40 +47,64 @@ _EVENTS_STREAM_SCHEMA: dict[str, T.StructType] = {}
 _STAGE_CACHE: dict[str, str] = {}
 
 #: Shuffle/state-store partitions for the streaming demos (see
-#: _run_to_memory's sizing note; overridable for experiments).
-_STREAM_PARTS = os.environ.get("SPARK_GRAFT_STREAM_PARTS", "4")
+#: _run_to_memory's sizing note).
+_STREAM_PARTS = "4"
 
 
-def _stage_dir(sf_dir: str) -> str:
-    """File stream sources require a *directory*; stage the fixture file
-    (hardlink — same bytes, no copy cost) into a scratch dir once."""
-    if sf_dir not in _STAGE_CACHE:
-        src = os.path.join(sf_dir, "events.parquet")
-        dst_dir = tempfile.mkdtemp(prefix="events_stream_")
-        dst = os.path.join(dst_dir, "events.parquet")
-        try:
-            os.link(src, dst)
-        except OSError:
-            import shutil
+def _stage_events(sf_dir: str, dst_dir: str) -> None:
+    """File stream sources require a *directory*: stage the events
+    fixture into ``dst_dir`` (hardlink — same bytes, no copy cost; a
+    copy only where linking fails, e.g. across file systems)."""
+    src = os.path.join(sf_dir, "events.parquet")
+    dst = os.path.join(dst_dir, "events.parquet")
+    try:
+        os.link(src, dst)
+    except OSError:
+        shutil.copyfile(src, dst)
 
-            shutil.copyfile(src, dst)
-        _STAGE_CACHE[sf_dir] = dst_dir
-    return _STAGE_CACHE[sf_dir]
+
+@contextmanager
+def _scratch(prefix: str, sf_dir: str | None = None):
+    """A per-invocation scratch dir, holding the staged events fixture
+    when ``sf_dir`` is given.  Removed on exit: the result lives in the
+    memory sink, so source, driver-batch and checkpoint files are dead
+    weight that suite and bench runs would otherwise leak."""
+    base = tempfile.mkdtemp(prefix=prefix)
+    try:
+        if sf_dir is not None:
+            _stage_events(sf_dir, base)
+        yield base
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
 
 
 def _read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     configure(spark)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     schema = _EVENTS_STREAM_SCHEMA.get(sf_dir)
     if schema is None:
         # Raw footer schema (pre-normalization) — the stream must read
         # the file exactly as written; ts normalization happens after.
         raw_batch = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
         schema = _EVENTS_STREAM_SCHEMA[sf_dir] = raw_batch.schema
-    raw = spark.readStream.schema(schema).parquet(_stage_dir(sf_dir))
+    if sf_dir not in _STAGE_CACHE:
+        _STAGE_CACHE[sf_dir] = tempfile.mkdtemp(prefix="events_stream_")
+        _stage_events(sf_dir, _STAGE_CACHE[sf_dir])
+    raw = spark.readStream.schema(schema).parquet(_STAGE_CACHE[sf_dir])
     # Watermarks demand TIMESTAMP (EVENT_TIME_IS_NOT_ON_TIMESTAMP_TYPE on
     # ntz); session TZ is pinned UTC so the instant matches the batch
     # twins' timestamp_ntz values exactly.
+    return normalize_events_ts(raw).withColumn("ts", F.col("ts").cast("timestamp"))
+
+
+def _events_stream(spark: SparkSession, schema: T.StructType, path: str) -> DataFrame:
+    """Events stream over every file under ``path`` (the staged fixture
+    plus any driver-batch sub-directories), raw footer ``schema``, ts
+    normalized to TIMESTAMP as in :func:`_read_events_stream`."""
+    raw = (
+        spark.readStream.schema(schema)
+        .option("recursiveFileLookup", "true")
+        .parquet(path)
+    )
     return normalize_events_ts(raw).withColumn("ts", F.col("ts").cast("timestamp"))
 
 
@@ -85,7 +112,13 @@ _NO_DATA_KEY = "spark.sql.streaming.noDataMicroBatches.enabled"
 
 
 def _run_to_memory(
-    df: DataFrame, output_mode: str, *, no_data_batches: bool = True
+    df: DataFrame,
+    output_mode: str,
+    *,
+    no_data_batches: bool = True,
+    driver_batches: Sequence[tuple[DataFrame, str]] = (),
+    query_name: str | None = None,
+    checkpoint: str | None = None,
 ) -> DataFrame:
     """Drive a streaming query over the static fixture to completion and
     return the memory-sink table.
@@ -100,72 +133,53 @@ def _run_to_memory(
     sizes this to state-bytes-per-partition and must keep it FIXED
     across restarts of the same checkpoint.
 
+    driver_batches: ``(frame, path)`` pairs, run in order after the
+    first drain.  Each frame is written to ``path`` — a new
+    sub-directory of the stream's source dir — with ``repartition(1)``,
+    then the query drains again, so every pair is exactly one more data
+    micro-batch.  Their purpose is to move the watermark
+    deterministically: batch N applies batch N−1's watermark, so a
+    frame's timestamps take effect one batch AFTER it lands (st09's
+    second sentinel batch is what emits the rows the first one made
+    evictable).  An empty fixture passes none: there is nothing to
+    evict, finalize or drop.
+
+    query_name / checkpoint: a restart (st25/st26) passes the same
+    pair to both runs, so the second query recovers the first's
+    source log and state and refills the same memory table.  Default:
+    a fresh name and Spark's temporary checkpoint.
+
     no_data_batches=False (round 11, guide §1/§5): skip the trailing
-    watermark-only micro-batches.  ONLY valid for queries whose every
-    output row is emitted in a DATA batch (e.g. st08's inner
-    stream-stream join — a pair emits in the batch where both rows are
-    present; no-data batches there only evict state that is about to be
-    thrown away with the stopped query).  Append-mode window aggregates
-    MUST keep the default: their final windows emit in exactly those
-    no-data batches.
+    watermark-only micro-batches.  ONLY valid when every output row is
+    emitted in a DATA batch — a driver batch counts as one (e.g. st08's
+    inner stream-stream join — a pair emits in the batch where both
+    rows are present; no-data batches there only evict state that is
+    about to be thrown away with the stopped query; st09/st22/st24 emit
+    every fixture row by their second driver batch).  Append-mode
+    window aggregates without driver batches MUST keep the default:
+    their final windows emit in exactly those no-data batches.
     """
     spark = df.sparkSession
-    key = "spark.sql.shuffle.partitions"
-    prev = spark.conf.get(key)
-    prev_nd = spark.conf.get(_NO_DATA_KEY)
-    name = f"mem_{uuid.uuid4().hex[:12]}"
-    try:
-        spark.conf.set(key, _STREAM_PARTS)  # bound at start(); restored below
-        if not no_data_batches:
-            spark.conf.set(_NO_DATA_KEY, "false")
-        q = (
-            df.writeStream.outputMode(output_mode)
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
+    name = query_name or f"mem_{uuid.uuid4().hex[:12]}"
+    confs = {"spark.sql.shuffle.partitions": _STREAM_PARTS}  # bound at start()
+    if not no_data_batches:
+        confs[_NO_DATA_KEY] = "false"
+    with scoped_conf(spark, confs):
+        writer = df.writeStream.outputMode(output_mode).format("memory").queryName(name)
+        if checkpoint is not None:
+            writer = writer.option("checkpointLocation", checkpoint)
+        q = writer.start()
         try:
             q.processAllAvailable()
+            for frame, path in driver_batches:
+                frame.repartition(1).write.parquet(path)
+                q.processAllAvailable()
         finally:
             q.stop()
-    finally:
-        spark.conf.set(key, prev)
-        spark.conf.set(_NO_DATA_KEY, prev_nd)
     # Memory-sink tables are session-scoped (they outlive the stopped
     # query), so the table reference is stable as-is — no extra
     # snapshot/view indirection needed.
-    return df.sparkSession.table(name)
-
-
-def _sentinel_scaffold(raw: DataFrame, schema: T.StructType):
-    """Bounds + template for the watermark-sentinel scaffolds
-    (st09/st21/st22/st24): ONE bounds job + ONE template-row job,
-    empty-fixture safe — returns ``(bounds, template)`` with
-    ``bounds['max']``/``bounds['min']``, or ``(None, None)`` on an
-    empty fixture so callers skip planting driver batches (the stream
-    result is empty either way) instead of raising IndexError.
-
-    For a tz-adjusted TimestampType vintage the bounds are collected as
-    ``unix_micros`` and shifted as INSTANTS in :func:`_sentinel_shift` —
-    ``collect()`` of TimestampType yields a naive local-timezone
-    datetime whose ``+ timedelta`` is wall-clock arithmetic across DST
-    transitions.  The timestamp_ntz vintage keeps naive datetimes: NTZ
-    plus INTERVAL is wall-clock by definition, so naive arithmetic IS
-    the in-plan semantics there.
-    """
-    rows = raw.limit(1).collect()
-    if not rows:
-        return None, None
-    if isinstance(schema["ts"].dataType, T.TimestampType):
-        b = raw.agg(
-            F.max(F.unix_micros("ts")).alias("_mx"),
-            F.min(F.unix_micros("ts")).alias("_mn"),
-        ).collect()[0]
-    else:
-        b = raw.agg(
-            F.max("ts").alias("_mx"), F.min("ts").alias("_mn")
-        ).collect()[0]
-    return {"max": b["_mx"], "min": b["_mn"]}, rows[0].asDict()
+    return spark.table(name)
 
 
 def _sentinel_shift(t0, hours: int, schema: T.StructType):
@@ -173,7 +187,7 @@ def _sentinel_shift(t0, hours: int, schema: T.StructType):
     (long vintage), tz-aware UTC datetime from epoch micros (instant
     vintage; createDataFrame converts aware datetimes via utctimetuple,
     so the process timezone never enters), or naive + timedelta (ntz
-    vintage — wall-clock on both sides).  See :func:`_sentinel_scaffold`."""
+    vintage — wall-clock on both sides).  See :func:`_sentinel_batches`."""
     ts_type = schema["ts"].dataType
     if isinstance(ts_type, T.LongType):  # nanos vintage
         return int(t0) + hours * 3600 * 10**9
@@ -184,6 +198,53 @@ def _sentinel_shift(t0, hours: int, schema: T.StructType):
             (int(t0) + hours * 3600 * 10**6) / 1e6, tz=_dt.timezone.utc
         )
     return t0 + _dt.timedelta(hours=hours)  # timestamp_ntz vintage
+
+
+def _sentinel_batches(
+    spark: SparkSession, raw: DataFrame, base: str, plants
+) -> list[tuple[DataFrame, str]]:
+    """Driver batches for :func:`_run_to_memory` — ``base/drv1``,
+    ``drv2``, … — one per ``(bound, hours, events)`` plant: sentinel
+    events at ``min``/``max(ts) + hours``, each an ``(event_id,
+    user_id, event_type)`` triple in the raw footer schema (so the
+    stream reads them), other columns copied from a fixture row.
+
+    The bounds and the template row are constants of the run: ONE
+    bounds job + ONE template-row job serve every plant, not two
+    fixture scans per sentinel.  An empty fixture gets no batches (the
+    stream result is empty either way) instead of an IndexError.
+
+    For a tz-adjusted TimestampType vintage the bounds are collected as
+    ``unix_micros`` and shifted as INSTANTS in :func:`_sentinel_shift` —
+    ``collect()`` of TimestampType yields a naive local-timezone
+    datetime whose ``+ timedelta`` is wall-clock arithmetic across DST
+    transitions.  The timestamp_ntz vintage keeps naive datetimes: NTZ
+    plus INTERVAL is wall-clock by definition, so naive arithmetic IS
+    the in-plan semantics there.
+    """
+    schema = raw.schema
+    first = raw.limit(1).collect()
+    if not first:
+        return []
+    if isinstance(schema["ts"].dataType, T.TimestampType):
+        b = raw.agg(
+            F.max(F.unix_micros("ts")).alias("max"),
+            F.min(F.unix_micros("ts")).alias("min"),
+        ).collect()[0]
+    else:
+        b = raw.agg(F.max("ts").alias("max"), F.min("ts").alias("min")).collect()[0]
+    template = first[0].asDict()
+    batches = []
+    for step, (bound, hours, events) in enumerate(plants, start=1):
+        ts_val = _sentinel_shift(b[bound], hours, schema)
+        rows = []
+        for eid, uid, etype in events:
+            row = dict(template, ts=ts_val, event_id=eid, user_id=uid, event_type=etype)
+            rows.append(tuple(row[f] for f in schema.fieldNames()))
+        batches.append(
+            (spark.createDataFrame(rows, schema), os.path.join(base, f"drv{step}"))
+        )
+    return batches
 
 
 @register(
@@ -588,121 +649,58 @@ def _watermarked_outer_stream_join(
     batches (matched sentinel pairs at user -1/-2, max(ts)+2h/+4h).
     ``how`` is 'left_outer' (st09) or 'full_outer' (st21)."""
     configure(spark)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    base = os.path.join(tempfile.gettempdir(), f"st09_{uuid.uuid4().hex[:12]}")
-    os.makedirs(base)
-    src = os.path.join(sf_dir, "events.parquet")
-    try:
-        os.link(src, os.path.join(base, "events.parquet"))
-    except OSError:
-        import shutil
-
-        shutil.copyfile(src, os.path.join(base, "events.parquet"))
-
-    raw = spark.read.parquet(src)
-    schema = raw.schema
-
-    # ONE bounds job + ONE template-row job up front (optimization
-    # round 10, the st24 re-plan): each _driver_frame call re-scanned
-    # the fixture for max(ts) and again for a template row — 4
-    # full-scan jobs for two 2-row sentinel writes.  The values are
-    # constants of the run; build each sentinel frame driver-side
-    # (empty-fixture-safe, instant-correct: _sentinel_scaffold).
-    _bounds, _template = _sentinel_scaffold(raw, schema)
-
-    def _driver_frame(uid: int, hours: int) -> DataFrame:
-        """One matched purchase+click pair at max(ts)+hours, sentinel
-        user/event ids, raw footer schema (so the stream reads it)."""
-        ts_val = _sentinel_shift(_bounds["max"], hours, schema)
-        rows = []
-        for ev_id, ev_type in (
-            (-uid * 2, "purchase"),
-            (-uid * 2 - 1, "click"),
-        ):
-            row = dict(_template)
-            row.update(
-                ts=ts_val,
-                event_id=ev_id,
-                user_id=-uid,
-                event_type=ev_type,
+    raw = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+    with _scratch("st09_", sf_dir) as base:
+        stream = _events_stream(spark, raw.schema, base)
+        purchases = (
+            stream.filter(F.col("event_type") == "purchase")
+            .select(
+                F.col("event_id").alias("purchase_id"),
+                F.col("user_id").alias("p_user"),
+                F.col("ts").alias("p_ts"),
             )
-            rows.append(tuple(row[f] for f in schema.fieldNames()))
-        return spark.createDataFrame(rows, schema)
-
-    stream = normalize_events_ts(
-        spark.readStream.schema(schema)
-        .option("recursiveFileLookup", "true")
-        .parquet(base)
-    ).withColumn("ts", F.col("ts").cast("timestamp"))
-    purchases = (
-        stream.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("p_ts"),
+            .withWatermark("p_ts", "30 minutes")
         )
-        .withWatermark("p_ts", "30 minutes")
-    )
-    clicks = (
-        stream.filter(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("c_user"),
-            F.col("ts").alias("c_ts"),
+        clicks = (
+            stream.filter(F.col("event_type") == "click")
+            .select(
+                F.col("event_id").alias("click_id"),
+                F.col("user_id").alias("c_user"),
+                F.col("ts").alias("c_ts"),
+            )
+            .withWatermark("c_ts", "30 minutes")
         )
-        .withWatermark("c_ts", "30 minutes")
-    )
-    cols = ["purchase_id", "click_id", "p_user"]
-    if how == "full_outer":
-        cols.append("c_user")
-    joined = purchases.join(
-        clicks,
-        (F.col("p_user") == F.col("c_user"))
-        & (F.col("c_ts") <= F.col("p_ts"))
-        & (F.col("c_ts") >= F.col("p_ts") - F.expr("INTERVAL 1 HOUR")),
-        how,
-    ).select(*cols)
-
-    key = "spark.sql.shuffle.partitions"
-    prev = spark.conf.get(key)
-    prev_nd = spark.conf.get(_NO_DATA_KEY)
-    name = f"mem_{uuid.uuid4().hex[:12]}"
-    try:
-        spark.conf.set(key, _STREAM_PARTS)
-        # No-data micro-batches off (round 11, guide §1/§5): every
-        # fixture row — matched AND NULL-side — emits by the drv2 DATA
-        # batch (it runs with drv1's +2h watermark, a 30-min margin
-        # over every fixture eviction bound; that is the scaffold's
-        # design), so the trailing watermark-only batches would only
-        # evict the sentinel pairs the final filter drops anyway.
-        # Profile r10: 3 of 6 micro-batches were no-data eviction scans.
-        spark.conf.set(_NO_DATA_KEY, "false")
-        q = (
-            joined.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .start()
+        cols = ["purchase_id", "click_id", "p_user"]
+        if how == "full_outer":
+            cols.append("c_user")
+        joined = purchases.join(
+            clicks,
+            (F.col("p_user") == F.col("c_user"))
+            & (F.col("c_ts") <= F.col("p_ts"))
+            & (F.col("c_ts") >= F.col("p_ts") - F.expr("INTERVAL 1 HOUR")),
+            how,
+        ).select(*cols)
+        # Two matched purchase+click sentinel pairs (users -1/-2) at
+        # max(ts)+2h/+4h.  No-data micro-batches off (round 11, guide
+        # §1/§5): every fixture row — matched AND NULL-side — emits by
+        # the drv2 DATA batch (it runs with drv1's +2h watermark, a
+        # 30-min margin over every fixture eviction bound; that is the
+        # scaffold's design), so the trailing watermark-only batches
+        # would only evict the sentinel pairs the final filter drops
+        # anyway.  Profile r10: 3 of 6 micro-batches were no-data
+        # eviction scans.
+        drivers = _sentinel_batches(
+            spark,
+            raw,
+            base,
+            [
+                ("max", 2, [(-2, -1, "purchase"), (-3, -1, "click")]),
+                ("max", 4, [(-4, -2, "purchase"), (-5, -2, "click")]),
+            ],
         )
-        try:
-            q.processAllAvailable()  # batch 0: the fixture file
-            if _bounds is not None:  # empty fixture: nothing to evict
-                for step, (uid, hours) in enumerate(((1, 2), (2, 4)), start=1):
-                    _driver_frame(uid, hours).repartition(1).write.parquet(
-                        os.path.join(base, f"drv{step}")
-                    )
-                    q.processAllAvailable()  # batch N applies batch N-1's watermark
-        finally:
-            q.stop()
-    finally:
-        spark.conf.set(key, prev)
-        spark.conf.set(_NO_DATA_KEY, prev_nd)
-        # The result lives in the memory sink; the per-invocation
-        # staging dir (fixture link + two driver batches) is dead
-        # weight — remove it so suite/bench runs don't leak disk.
-        import shutil
-
-        shutil.rmtree(base, ignore_errors=True)
-    out = spark.table(name)
+        out = _run_to_memory(
+            joined, "append", no_data_batches=False, driver_batches=drivers
+        )
     if how == "full_outer":
         # Sentinel driver rows inner-match each other, so both user
         # columns carry the negative sentinel — fixture rows always
@@ -760,8 +758,6 @@ def st10_stream_upsert_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
         # not safe, so land the merge beside it and promote atomically.
         staged = serve_dir + f".epoch{epoch_id}"
         merged.coalesce(1).write.mode("overwrite").parquet(staged)
-        import shutil
-
         shutil.rmtree(serve_dir, ignore_errors=True)
         os.rename(staged, serve_dir)
 
@@ -775,6 +771,16 @@ def st10_stream_upsert_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_events",
         F.unix_micros(F.col("last_ts").cast("timestamp")).alias("last_ts_us"),
     )
+
+
+def _promote(split_dir: str, dst: str) -> None:
+    """Move one parity of a dynamic-partition split into the stream's
+    source dir.  The write creates no ``m=<v>`` directory for a parity
+    without rows; that parity becomes an empty directory instead."""
+    if os.path.isdir(split_dir):
+        os.rename(split_dir, dst)
+    else:
+        os.makedirs(dst)
 
 
 @register(
@@ -820,7 +826,7 @@ def st11_checkpoint_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch.withColumn("m", F.col("event_id") % 2).repartition(1).write.partitionBy(
         "m"
     ).parquet(split_root)
-    os.rename(os.path.join(split_root, "m=0"), os.path.join(src_dir, "part1"))
+    _promote(os.path.join(split_root, "m=0"), os.path.join(src_dir, "part1"))
     part2_staging = os.path.join(split_root, "m=1")
 
     schema = batch.schema
@@ -843,7 +849,7 @@ def st11_checkpoint_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
             q.stop()
 
     run_once()  # phase 1: file 1 only
-    os.rename(part2_staging, os.path.join(src_dir, "part2"))
+    _promote(part2_staging, os.path.join(src_dir, "part2"))
     run_once()  # phase 2: restart from the same checkpoint
     return (
         spark.read.parquet(sink_dir)
@@ -1699,106 +1705,51 @@ def st21_stream_stream_full_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def st22_stream_chained_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     configure(spark)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    base = os.path.join(tempfile.gettempdir(), f"st22_{uuid.uuid4().hex[:12]}")
-    os.makedirs(base)
-    src = os.path.join(sf_dir, "events.parquet")
-    try:
-        os.link(src, os.path.join(base, "events.parquet"))
-    except OSError:
-        import shutil
-
-        shutil.copyfile(src, os.path.join(base, "events.parquet"))
-
-    raw = spark.read.parquet(src)
-    schema = raw.schema
-
-    # ONE bounds job + ONE template-row job up front (the st24 re-plan):
-    # each sentinel previously re-scanned the fixture for max(ts) and a
-    # template row; the values are constants of the run
-    # (empty-fixture-safe, instant-correct: _sentinel_scaffold).
-    _bounds, _template = _sentinel_scaffold(raw, schema)
-
-    def _driver_frame(hours: int) -> DataFrame:
-        """One sentinel event at max(ts)+hours — advances the watermark;
-        its own 10-min window never finalizes, so it never emits."""
-        ts_val = _sentinel_shift(_bounds["max"], hours, schema)
-        row = dict(_template)
-        row.update(
-            ts=ts_val, event_id=-1, user_id=-1, event_type="wm_sentinel"
+    raw = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+    with _scratch("st22_", sf_dir) as base:
+        stream = _events_stream(spark, raw.schema, base)
+        lvl1 = (
+            stream.withWatermark("ts", "10 minutes")
+            .groupBy(F.window("ts", "10 minutes").alias("w10"), "event_type")
+            .agg(F.count("*").alias("n_events"))
         )
-        return spark.createDataFrame(
-            [tuple(row[f] for f in schema.fieldNames())], schema
+        lvl2 = (
+            lvl1.groupBy(
+                F.window(F.window_time("w10"), "1 hour").alias("wh"), "event_type"
+            )
+            .agg(
+                F.count("*").alias("n_buckets"),
+                F.sum("n_events").alias("total_events"),
+                F.max("n_events").alias("max_bucket"),
+            )
+            .select(
+                F.unix_micros(F.col("wh.start").cast("timestamp")).alias(
+                    "hour_start_us"
+                ),
+                "event_type",
+                F.col("n_buckets").cast("long").alias("n_buckets"),
+                F.col("total_events").cast("long").alias("total_events"),
+                F.col("max_bucket").cast("long").alias("max_bucket"),
+            )
         )
-
-    stream = normalize_events_ts(
-        spark.readStream.schema(schema)
-        .option("recursiveFileLookup", "true")
-        .parquet(base)
-    ).withColumn("ts", F.col("ts").cast("timestamp"))
-    lvl1 = (
-        stream.withWatermark("ts", "10 minutes")
-        .groupBy(F.window("ts", "10 minutes").alias("w10"), "event_type")
-        .agg(F.count("*").alias("n_events"))
-    )
-    lvl2 = (
-        lvl1.groupBy(
-            F.window(F.window_time("w10"), "1 hour").alias("wh"), "event_type"
+        # One sentinel event at max(ts)+2h, then +4h: advances the
+        # watermark; its own 10-min window never finalizes, so it never
+        # emits.  No-data micro-batches off (round 11): every fixture
+        # window — lvl1 10-min and lvl2 1-hour — finalizes by the drv2
+        # DATA batch (wm = drv1's +2h with a ≥50-min margin over the
+        # last fixture hour window); the trailing watermark-only batches
+        # would only finalize the sentinel's own windows, which the
+        # event_type filter drops.
+        drivers = _sentinel_batches(
+            spark, raw, base, [("max", h, [(-1, -1, "wm_sentinel")]) for h in (2, 4)]
         )
-        .agg(
-            F.count("*").alias("n_buckets"),
-            F.sum("n_events").alias("total_events"),
-            F.max("n_events").alias("max_bucket"),
+        out = _run_to_memory(
+            lvl2, "append", no_data_batches=False, driver_batches=drivers
         )
-        .select(
-            F.unix_micros(F.col("wh.start").cast("timestamp")).alias(
-                "hour_start_us"
-            ),
-            "event_type",
-            F.col("n_buckets").cast("long").alias("n_buckets"),
-            F.col("total_events").cast("long").alias("total_events"),
-            F.col("max_bucket").cast("long").alias("max_bucket"),
-        )
-    )
-    key = "spark.sql.shuffle.partitions"
-    prev = spark.conf.get(key)
-    prev_nd = spark.conf.get(_NO_DATA_KEY)
-    name = f"mem_{uuid.uuid4().hex[:12]}"
-    try:
-        spark.conf.set(key, _STREAM_PARTS)
-        # No-data micro-batches off (round 11): every fixture window —
-        # lvl1 10-min and lvl2 1-hour — finalizes by the drv2 DATA batch
-        # (wm = drv1's +2h with a ≥50-min margin over the last fixture
-        # hour window); the trailing watermark-only batches would only
-        # finalize the sentinel's own windows, which the event_type
-        # filter drops.
-        spark.conf.set(_NO_DATA_KEY, "false")
-        q = (
-            lvl2.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()  # batch 0: the fixture file
-            if _bounds is not None:  # empty fixture: nothing to finalize
-                for step, hours in enumerate((2, 4), start=1):
-                    _driver_frame(hours).repartition(1).write.parquet(
-                        os.path.join(base, f"drv{step}")
-                    )
-                    q.processAllAvailable()  # batch N applies batch N-1's wm
-        finally:
-            q.stop()
-    finally:
-        spark.conf.set(key, prev)
-        spark.conf.set(_NO_DATA_KEY, prev_nd)
-        import shutil
-
-        shutil.rmtree(base, ignore_errors=True)
     # Sentinel windows normally never finalize (the watermark trails
     # them), but emission timing is an engine detail — the type key
     # makes them deterministically filterable either way.
-    return spark.table(name).filter(F.col("event_type") != "wm_sentinel")
+    return out.filter(F.col("event_type") != "wm_sentinel")
 
 
 @register(
@@ -1877,103 +1828,42 @@ def st23_stream_static_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def st24_stream_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     configure(spark)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    base = os.path.join(tempfile.gettempdir(), f"st24_{uuid.uuid4().hex[:12]}")
-    os.makedirs(base)
-    src = os.path.join(sf_dir, "events.parquet")
-    try:
-        os.link(src, os.path.join(base, "events.parquet"))
-    except OSError:
-        import shutil
-
-        shutil.copyfile(src, os.path.join(base, "events.parquet"))
-
-    raw = spark.read.parquet(src)
-    schema = raw.schema
-
-    # ONE bounds job + ONE template-row job up front (optimization round
-    # 10): the three sentinel plants below each re-scanned the fixture
-    # for min/max(ts) and again for a template row — 6 full-scan jobs
-    # for 3 single-row writes.  The values are constants of the run;
-    # compute them once and build each sentinel driver-side
-    # (empty-fixture-safe, instant-correct: _sentinel_scaffold).
-    _bounds, _template = _sentinel_scaffold(raw, schema)
-
-    def _plant(agg_col: str, hours: int, event_type: str) -> DataFrame:
-        """One event at min/max(ts)+hours with the given type; sentinel
-        ids.  agg_col: 'max' advances the watermark, 'min' is LATE."""
-        ts_val = _sentinel_shift(_bounds[agg_col], hours, schema)
-        row = dict(_template)
-        row.update(
-            ts=ts_val, event_id=-1, user_id=-1, event_type=event_type
+    raw = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+    with _scratch("st24_", sf_dir) as base:
+        agg = (
+            _events_stream(spark, raw.schema, base)
+            .withWatermark("ts", "10 minutes")
+            .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
+            .agg(F.count("*").alias("n_events"))
+            .select(
+                F.unix_micros(F.col("w.start").cast("timestamp")).alias(
+                    "window_start_us"
+                ),
+                "event_type",
+                "n_events",
+            )
         )
-        return spark.createDataFrame(
-            [tuple(row[f] for f in schema.fieldNames())], schema
+        # Batches 1+2: sentinels at max+2h/+4h — batch N applies batch
+        # N-1's watermark, so every fixture window emits by batch 2.
+        # Batch 3: the LATE row — a duplicate-shaped 'click' at the
+        # stream MINIMUM timestamp.  Its hour window closed (and was
+        # emitted) batches ago; the watermark drops it.  If it were
+        # counted, that window's n_events would differ from the
+        # fixture-only oracle and the hash would fail.  No-data
+        # micro-batches off (round 11): the late row drops against the
+        # drv2 watermark, and trailing watermark-only batches would
+        # only emit the filtered wm_sentinel windows.
+        drivers = _sentinel_batches(
+            spark,
+            raw,
+            base,
+            [("max", h, [(-1, -1, "wm_sentinel")]) for h in (2, 4)]
+            + [("min", 0, [(-1, -1, "click")])],
         )
-
-    stream = normalize_events_ts(
-        spark.readStream.schema(schema)
-        .option("recursiveFileLookup", "true")
-        .parquet(base)
-    ).withColumn("ts", F.col("ts").cast("timestamp"))
-    agg = (
-        stream.withWatermark("ts", "10 minutes")
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.count("*").alias("n_events"))
-        .select(
-            F.unix_micros(F.col("w.start").cast("timestamp")).alias(
-                "window_start_us"
-            ),
-            "event_type",
-            "n_events",
+        out = _run_to_memory(
+            agg, "append", no_data_batches=False, driver_batches=drivers
         )
-    )
-    key = "spark.sql.shuffle.partitions"
-    prev = spark.conf.get(key)
-    prev_nd = spark.conf.get(_NO_DATA_KEY)
-    name = f"mem_{uuid.uuid4().hex[:12]}"
-    try:
-        spark.conf.set(key, _STREAM_PARTS)
-        # No-data micro-batches off (round 11): every fixture hour
-        # window emits by the drv2 DATA batch (wm = +2h - 10 min), and
-        # the late-row batch 3 drops its row against that same
-        # watermark; trailing watermark-only batches would only emit
-        # the filtered wm_sentinel windows.
-        spark.conf.set(_NO_DATA_KEY, "false")
-        q = (
-            agg.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()  # batch 0: fixture (wm still 0)
-            # batch 1+2: sentinels at max+2h/+4h — batch N applies batch
-            # N-1's watermark, so every fixture window emits by batch 2.
-            if _bounds is not None:  # empty fixture: nothing to emit/drop
-                for step, hours in enumerate((2, 4), start=1):
-                    _plant("max", hours, "wm_sentinel").repartition(
-                        1
-                    ).write.parquet(os.path.join(base, f"drv{step}"))
-                    q.processAllAvailable()
-                # batch 3: the LATE row — a duplicate-shaped 'click' at
-                # the stream MINIMUM timestamp.  Its hour window closed
-                # (and was emitted) batches ago; the watermark drops it.
-                # If it were counted, that window's n_events would differ
-                # from the fixture-only oracle and the hash would fail.
-                _plant("min", 0, "click").repartition(1).write.parquet(
-                    os.path.join(base, "late")
-                )
-                q.processAllAvailable()
-        finally:
-            q.stop()
-    finally:
-        spark.conf.set(key, prev)
-        spark.conf.set(_NO_DATA_KEY, prev_nd)
-        import shutil
-
-        shutil.rmtree(base, ignore_errors=True)
-    return spark.table(name).filter(F.col("event_type") != "wm_sentinel")
+    return out.filter(F.col("event_type") != "wm_sentinel")
 
 
 @register(
@@ -2035,7 +1925,7 @@ _ROCKSDB_PROVIDER = (
     "bit-identically to the in-memory provider's — proving the backend "
     "swap is a pure operational knob, not a semantics change.  The "
     "provider is pinned ONLY for this query's session window (conf "
-    "save/restore) because the provider of a checkpoint must never "
+    "scope) because the provider of a checkpoint must never "
     "change across restarts.",
 )
 def st26_rocksdb_state_store(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2046,37 +1936,19 @@ def _stateful_restart_recovery(
     spark: SparkSession, sf_dir: str, provider: str | None
 ) -> DataFrame:
     configure(spark)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    base = os.path.join(tempfile.gettempdir(), f"st25_{uuid.uuid4().hex[:12]}")
-    src_dir = os.path.join(base, "src")
-    ckpt_dir = os.path.join(base, "ckpt")
-    os.makedirs(src_dir)
-
     raw = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-    schema = raw.schema
-    raw.filter(F.col("event_id") % 2 == 0).write.parquet(
-        os.path.join(src_dir, "part1")
-    )
-    part2_staging = os.path.join(base, "part2_staging")
-    raw.filter(F.col("event_id") % 2 == 1).write.parquet(part2_staging)
-
     name = f"mem_{uuid.uuid4().hex[:12]}"
-    key = "spark.sql.shuffle.partitions"
-    prev = spark.conf.get(key)
-    prov_key = "spark.sql.streaming.stateStore.providerClass"
-    try:
-        prov_prev = spark.conf.get(prov_key)
-    except Exception:
-        prov_prev = None
-
-    def run_once(qname: str) -> None:
-        stream = normalize_events_ts(
-            spark.readStream.schema(schema)
-            .option("recursiveFileLookup", "true")
-            .parquet(src_dir)
-        ).withColumn("ts", F.col("ts").cast("timestamp"))
+    with _scratch("st25_") as base:
+        src_dir = os.path.join(base, "src")
+        ckpt_dir = os.path.join(base, "ckpt")
+        raw.filter(F.col("event_id") % 2 == 0).write.parquet(
+            os.path.join(src_dir, "part1")
+        )
+        part2_staging = os.path.join(base, "part2_staging")
+        raw.filter(F.col("event_id") % 2 == 1).write.parquet(part2_staging)
         agg = (
-            stream.groupBy(F.window("ts", "1 day").alias("w"), "event_type")
+            _events_stream(spark, raw.schema, src_dir)
+            .groupBy(F.window("ts", "1 day").alias("w"), "event_type")
             .agg(F.count("*").alias("n_events"))
             .select(
                 F.unix_micros(F.col("w.start").cast("timestamp")).alias(
@@ -2086,38 +1958,17 @@ def _stateful_restart_recovery(
                 "n_events",
             )
         )
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(qname)
-            .option("checkpointLocation", ckpt_dir)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-
-    try:
-        spark.conf.set(key, _STREAM_PARTS)  # MUST stay fixed across restarts
-        if provider is not None:  # same rule: fixed for a checkpoint's life
-            spark.conf.set(prov_key, provider)
-        run_once(name)  # phase 1: even half builds state
-        os.rename(part2_staging, os.path.join(src_dir, "part2"))
-        run_once(name)  # phase 2: restart recovers state, adds odd half
-    finally:
-        spark.conf.set(key, prev)
-        if provider is not None:
-            if prov_prev is None:
-                spark.conf.unset(prov_key)
-            else:
-                spark.conf.set(prov_key, prov_prev)
-        # Result lives in the memory sink; source/checkpoint dirs are
-        # dead weight after phase 2 (the st09 disk-leak lesson).
-        import shutil
-
-        shutil.rmtree(base, ignore_errors=True)
-    return spark.table(name)
+        # The state-store provider, like the partition count
+        # _run_to_memory pins, is fixed for a checkpoint's whole life.
+        prov_key = "spark.sql.streaming.stateStore.providerClass"
+        with scoped_conf(spark, {} if provider is None else {prov_key: provider}):
+            # phase 1: even half builds state
+            _run_to_memory(agg, "complete", query_name=name, checkpoint=ckpt_dir)
+            os.rename(part2_staging, os.path.join(src_dir, "part2"))
+            # phase 2: restart recovers state, adds odd half
+            return _run_to_memory(
+                agg, "complete", query_name=name, checkpoint=ckpt_dir
+            )
 
 
 @register(
@@ -2409,7 +2260,7 @@ def st30_offset_replay_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch.withColumn("m", F.col("event_id") % 2).repartition(1).write.partitionBy(
         "m"
     ).parquet(split_root)
-    os.rename(os.path.join(split_root, "m=0"), os.path.join(src_dir, "part1"))
+    _promote(os.path.join(split_root, "m=0"), os.path.join(src_dir, "part1"))
     part2_staging = os.path.join(split_root, "m=1")
     schema = batch.schema
     manifest_path = os.path.join(out_dir, "_manifest.json")
@@ -2445,7 +2296,7 @@ def st30_offset_replay_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         finally:
             q.stop()
 
-    run_once(ckpt_dir)  # run 1: part1, >=1 committed batches
+    run_once(ckpt_dir)  # run 1: part1, >=1 committed batches unless empty
     # Simulate the producer crash window: sink committed batch n, but
     # the source log lost commits/<n> (offsets/<n> survives) — the
     # restarted engine MUST re-execute batch n into the sink.  The
@@ -2456,22 +2307,23 @@ def st30_offset_replay_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cross-run protection a real crash would not trip, because a
     # crashed driver's cache dies with it.  A fresh path IS the fresh
     # driver.
-    import shutil
-
     ckpt2_dir = os.path.join(base, "ckpt_after_crash")
     shutil.copytree(ckpt_dir, ckpt2_dir)
     commits_dir = os.path.join(ckpt2_dir, "commits")
     nums = sorted(
-        int(name) for name in os.listdir(commits_dir) if name.isdigit()
+        int(name)
+        for name in (os.listdir(commits_dir) if os.path.isdir(commits_dir) else ())
+        if name.isdigit()
     )
     # remove the marker AND its ChecksumFileSystem .crc sidecar — a
     # stale crc alone makes the re-commit's atomic create fail as a
-    # phantom concurrent writer
-    for name in (str(nums[-1]), f".{nums[-1]}.crc"):
+    # phantom concurrent writer.  An empty part1 (no even ids) commits
+    # no batch in run 1, so there is nothing to replay.
+    for name in (str(nums[-1]), f".{nums[-1]}.crc") if nums else ():
         p = os.path.join(commits_dir, name)
         if os.path.exists(p):
             os.remove(p)
-    os.rename(part2_staging, os.path.join(src_dir, "part2"))
+    _promote(part2_staging, os.path.join(src_dir, "part2"))
     run_once(ckpt2_dir)  # run 2: replays batch n, then processes part2
 
     with open(manifest_path) as fh:

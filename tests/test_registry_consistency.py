@@ -144,3 +144,24 @@ def test_no_lazy_local_checkpoint():
         if "localCheckpoint(eager=False)" in p.read_text()
     ]
     assert not offenders, offenders
+
+
+def test_session_conf_changes_only_through_session_module():
+    """Package code changes session conf only via session.py —
+    ``configure``'s RUNTIME_CONFS or a ``scoped_conf`` block, which
+    restores each key (or unsets it) on exit.  A bare ``conf.set`` /
+    ``conf.unset`` elsewhere leaks into every later query on the
+    session, and hand-rolled restores drifted into three different
+    rules (old value, guessed default, unset)."""
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / (
+        "spark_ml_optimization_spark"
+    )
+    offenders = [
+        str(p)
+        for p in pkg.rglob("*.py")
+        if p.name != "session.py"
+        and ("conf.set(" in p.read_text() or "conf.unset(" in p.read_text())
+    ]
+    assert not offenders, offenders

@@ -201,3 +201,51 @@ def test_offset_replay_delivers_batch_twice_and_sink_absorbs_it(spark, tmp_path)
         r["id"] for r in spark.read.parquet(os.path.join(out, "b=0"), os.path.join(out, "b=1")).collect()
     )
     assert got == list(range(20)), got  # idempotent: no 2x, no loss
+
+
+def _events_fixture(tmp_path, keep):
+    """A one-table sf_dir whose events.parquet is sf0.01's events
+    filtered by ``keep`` (table -> row mask), schema unchanged."""
+    import pyarrow.parquet as pq
+
+    table = pq.read_table(f"{SF_CORRECT}/events.parquet")
+    pq.write_table(table.filter(keep(table)), str(tmp_path / "events.parquet"))
+    return str(tmp_path)
+
+
+def test_split_restart_twins_survive_a_missing_parity(spark, tmp_path):
+    """st11/st30 split the fixture by event_id parity with one
+    dynamic-partition write, which creates no directory for a parity
+    without rows.  On an odd-ids-only fixture both must still match
+    their oracles over that file."""
+    import duckdb
+    import pyarrow.compute as pc
+
+    from .harness import compare
+
+    sf_dir = _events_fixture(
+        tmp_path, lambda t: pc.equal(pc.bit_wise_and(t["event_id"], 1), 1)
+    )
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW events AS SELECT * FROM read_parquet('{sf_dir}/events.parquet')"
+    )
+    for name in ("st11_checkpoint_exactly_once", "st30_offset_replay_sink"):
+        q = all_queries()[name]
+        compare(q.fn(spark, sf_dir).toPandas(), con.execute(q.oracle).df(), name)
+    con.close()
+
+
+def test_sentinel_driven_twins_on_an_empty_fixture(spark, tmp_path):
+    """st09/st21/st22/st24 plant no driver batches when the fixture has
+    no rows (there is nothing to evict, finalize or drop): the shared
+    memory-sink driver runs the lone fixture batch and each query
+    returns zero rows."""
+    sf_dir = _events_fixture(tmp_path, lambda t: [False] * t.num_rows)
+    for name in (
+        "st09_stream_stream_left_join",
+        "st21_stream_stream_full_join",
+        "st22_stream_chained_windows",
+        "st24_stream_late_data_drop",
+    ):
+        assert all_queries()[name].fn(spark, sf_dir).count() == 0, name
