@@ -114,48 +114,91 @@ def scoped_conf(spark: SparkSession, confs: dict[str, str]):
                 spark.conf.set(k, v)
 
 
+_MB = 1024**2
+#: Free space a tmpfs needs, and RAM it must leave beside the heap, before
+#: it becomes the default scratch.
+_TMPFS_MIN = 8 * 1024**3
+
+
+def default_heap_mb(phys_bytes: int) -> int:
+    """Driver heap for a host with ``phys_bytes`` of RAM: half of it, at
+    least 1g.  Local mode runs driver and executors in this one JVM; the
+    other half is left to Python workers, the page cache and tmpfs."""
+    return max(1024, phys_bytes // 2 // _MB)
+
+
+def tmpfs_scratch_fits(shm_free_bytes: int, phys_bytes: int, heap_mb: int) -> bool:
+    """Whether a tmpfs with ``shm_free_bytes`` free may hold scratch.  A
+    tmpfs stores its files in RAM, so beyond its own free space the host
+    must keep ``_TMPFS_MIN`` of RAM spare after the heap."""
+    return shm_free_bytes >= _TMPFS_MIN and phys_bytes - heap_mb * _MB >= _TMPFS_MIN
+
+
+def _memory_mb(spec: str) -> int:
+    """MiB in a ``spark.driver.memory`` string such as ``8g`` or ``512m``
+    (no suffix means MiB, as Spark reads it)."""
+    spec = spec.strip().lower().removesuffix("b")
+    scale = {"k": 1 / 1024, "m": 1, "g": 1024, "t": 1024**2}
+    if spec[-1:] in scale:
+        return int(float(spec[:-1]) * scale[spec[-1]])
+    return int(spec)
+
+
 def get_spark(app_name: str = "spark_ml_optimization_spark") -> SparkSession:
-    """Build (or get) a local session sized for this container.
+    """Build (or get) a local session sized for this host.
 
     local[N] with N from SPARK_GRAFT_CPUS (default: all cores).  Single-JVM
-    local mode: driver memory is the only knob.  Cluster deployments would
+    local mode: driver memory is the only knob, half the host's RAM unless
+    SPARK_DRIVER_MEMORY says otherwise.  Cluster deployments would
     configure executors instead; the SQL confs in RUNTIME_CONFS apply to
     both deployment shapes.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    heap = os.environ.get("SPARK_DRIVER_MEMORY") or f"{default_heap_mb(phys)}m"
+    heap_mb = _memory_mb(heap)
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config("spark.driver.memory", heap)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
     )
     # Scratch on tmpfs when available (optimization round 10, guide §6):
     # shuffle files, block-manager spill, and Structured Streaming's
     # temporary checkpoint/state directories are latency-bound local I/O
-    # — on this container /tmp is ext4 while /dev/shm is RAM-backed
+    # — on the 32-core VM /tmp was ext4 while /dev/shm is RAM-backed
     # (measured best-of-3 at sf0.1: st24 5.5 -> 4.5 s, st22 4.6 -> 4.5 s,
     # st09 6.6 -> 6.2 s; batch shuffles unchanged-to-slightly-better).
     # The cluster-scale analogue is pointing spark.local.dir at local
-    # NVMe instead of a network mount — a deployment setting, so it is
-    # env-overridable and falls back to the JVM default when no tmpfs
-    # exists.  Scratch volume at bench scale is MBs, far below the
-    # 126 GB tmpfs.
+    # NVMe instead of a network mount — a deployment setting, so
+    # SPARK_GRAFT_SCRATCH overrides it in both directions, and it falls
+    # back to the JVM default when no tmpfs exists.
     scratch = os.environ.get("SPARK_GRAFT_SCRATCH")
     if scratch is None and os.path.isdir("/dev/shm") and os.access("/dev/shm", os.W_OK):
-        # Capacity gate (round-11 advice): Docker's default /dev/shm is
-        # 64 MB — auto-defaulting shuffle/spill there would ENOSPC on a
-        # standard container, and spilling to RAM-backed tmpfs consumes
-        # the memory spill exists to relieve.  Require several GB free
-        # before electing tmpfs; SPARK_GRAFT_SCRATCH stays the explicit
-        # override in both directions.
+        # Capacity gate: Docker's default /dev/shm is 64 MB, and tmpfs is
+        # RAM — on a 15 GB host a half-RAM heap leaves too little of it
+        # for tmpfs spill, so such a host keeps the JVM default scratch.
         try:
             _vfs = os.statvfs("/dev/shm")
-            if _vfs.f_bavail * _vfs.f_frsize >= 8 * 1024**3:
+            if tmpfs_scratch_fits(_vfs.f_bavail * _vfs.f_frsize, phys, heap_mb):
                 scratch = "/dev/shm/spark_ml_optimization_scratch"
         except OSError:
             pass
-    extra_jvm = []
+    # The throughput collector.  In local mode one JVM holds the driver
+    # and every executor and runs batch queries back to back, so pause
+    # length matters little and G1's concurrent marking, refinement
+    # threads and write barriers are overhead.  Measured against G1 on
+    # 4 cores / 15 GB: perfbench build_heavy cpu_s won 9 of 10
+    # interleaved pairs, median 34.4 -> 29.6 s, with identical Spark
+    # job/stage/task counts.  The heap starts at its maximum (-Xms):
+    # this collector resizes the heap only at collections, so growing it
+    # from the JVM's default of 1/64 of RAM spends the first queries of a
+    # session in extra collections and resizes whose timing varies from
+    # run to run (see CHANGES.md for the measured first-query times).
+    # Pages are still touched only as they are used.  JVM flags are
+    # start-time only; a driver-owned session is unaffected.
+    extra_jvm = ["-XX:+UseParallelGC", f"-Xms{heap_mb}m"]
     if scratch:
         try:
             os.makedirs(scratch, exist_ok=True)
@@ -163,25 +206,14 @@ def get_spark(app_name: str = "spark_ml_optimization_spark") -> SparkSession:
             extra_jvm.append(f"-Djava.io.tmpdir={scratch}")
         except OSError:
             pass
-    # JVM flags (GC choice etc.) — start-time only, so env-injected here;
-    # an already-running session (driver-owned) is unaffected.
-    java_opts = os.environ.get("SPARK_DRIVER_JAVA_OPTS")
-    if java_opts:
-        extra_jvm.append(java_opts)
-    if extra_jvm:
-        builder = builder.config(
-            "spark.driver.extraJavaOptions", " ".join(extra_jvm)
-        )
+    builder = builder.config("spark.driver.extraJavaOptions", " ".join(extra_jvm))
     # Periodic ContextCleaner GC (default 30min) tightened to 2min: a
     # 280-query single-JVM suite accumulates dropped-RDD/shuffle/state
     # debt between the bench harness's explicit per-5-query System.gc()
     # calls, and long pytest sessions have no explicit GC at all — the
     # migrating 5-10x in-suite spikes (BASELINE.md round-7) shrink when
-    # the cleaner keeps pace.  Env-overridable for A/B runs.
-    builder = builder.config(
-        "spark.cleaner.periodicGC.interval",
-        os.environ.get("SPARK_GRAFT_PERIODIC_GC", "2min"),
-    )
+    # the cleaner keeps pace.
+    builder = builder.config("spark.cleaner.periodicGC.interval", "2min")
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return configure(spark)

@@ -20,6 +20,12 @@ SF_CORRECT = "/root/testdata/sf0.01"
 SF_BENCH = "/root/testdata/sf0.1"
 
 
+def fastlane_workers(spark) -> int:
+    """Threads for the fastlanes' concurrent actions: two per scheduler
+    slot of the session (its ``local[N]`` core count), at most 16."""
+    return min(16, 2 * spark.sparkContext.defaultParallelism)
+
+
 @pytest.fixture(scope="session")
 def spark():
     from spark_ml_optimization_spark.session import get_spark

@@ -24,7 +24,7 @@ import duckdb
 from spark_ml_optimization_spark import registry
 from spark_ml_optimization_spark.sources import TABLES
 
-from .conftest import SF_CORRECT, SF_SMOKE
+from .conftest import SF_CORRECT, SF_SMOKE, fastlane_workers
 from .harness import assert_driver_hashable_schema, compare
 
 #: Queries that mutate shared session state while CONSTRUCTING their
@@ -68,7 +68,7 @@ def test_all_sql_oracles_sf001_threaded(spark):
 
     for n in serial:
         check(n)
-    with ThreadPoolExecutor(max_workers=16) as pool:
+    with ThreadPoolExecutor(max_workers=fastlane_workers(spark)) as pool:
         list(pool.map(check, threaded))
     con.close()
 
