@@ -182,6 +182,14 @@ def build_replica(spark, factor: int) -> str:
     return out
 
 
+def replica_suffix(r: int) -> str:
+    """Token suffix of content replica ``r``.  The separator keeps a
+    suffixed token apart from every fixture token (the fixture
+    vocabulary has no ``_``) and from every other replica's tokens;
+    a bare ``r{r}`` let ``"a" + "r1"`` collide with a token ``"ar1"``."""
+    return f"_r{r}"
+
+
 def build_content_replica(spark, factor: int) -> str:
     """Documents-only content replica (see CONTENT_ARM): doc_ids
     key-shifted AND every token suffixed per replica, so replicas are
@@ -204,7 +212,7 @@ def build_content_replica(spark, factor: int) -> str:
                 F.array_join(
                     F.transform(
                         F.split("text", " "),
-                        lambda t, _r=r: F.concat(t, F.lit(f"r{_r}")),
+                        lambda t, _r=r: F.concat(t, F.lit(replica_suffix(_r))),
                     ),
                     " ",
                 ),

@@ -975,11 +975,7 @@ def st12_stream_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).alias("p_ref"),
             )
         )
-        # n_events = sum over bins of n_cur (every batch row lands in
-        # exactly one bin — bin_of is total), read off the aggregate
-        # already in hand instead of a second batch_df.count() job.
-        out = j.agg(
-            F.max("t_cur").cast("long").alias("n_events"),
+        psi = j.agg(
             F.round(
                 F.sum(
                     (F.col("p_cur") - F.col("p_ref"))
@@ -987,7 +983,14 @@ def st12_stream_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ),
                 4,
             ).alias("psi_total"),
-        ).select("n_events", "psi_total")
+        )
+        # n_events = sum over bins of n_cur (every batch row lands in
+        # exactly one bin — bin_of is total), read off the one-row
+        # aggregate already in hand instead of a second batch_df.count()
+        # job; not off the join, which is empty when no bin matches.
+        out = tot.crossJoin(psi).select(
+            F.col("t_cur").cast("long").alias("n_events"), "psi_total"
+        )
         out.write.mode("append").parquet(sink_dir)
 
     schema = ev.schema

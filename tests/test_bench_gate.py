@@ -1,46 +1,48 @@
-"""Bench budget tripwire (round-5 verdict item #7).
+"""Bench budget tripwire.
 
-Reads the most recent bench sidecar (BENCH_DETAIL.json, written by
-bench.py at every driver/round bench) and asserts the established
-"intrinsic tail only" property: no single query over the 10 s
-standalone-equivalent line, and the suite mean under 1.3 s/query on at
-least one of two arms — the raw mean, or the WEATHER-NORMALIZED mean
-(round 8: bench.py divides the suite mean by the same-run ratio of the
-17-query HEADLINE basket vs its pinned round-7 record, measured under
-the identical in-suite protocol; cheap scan canaries were tried first
-and rejected — they overcorrect ~3x because scans track CPU contention
-while the suite's weather response is dominated by micro-batch waits,
-fit iterations and GC — so canaries remain diagnostic-only in the
-sidecar).  Round 9 hardened the normalized arm: the excusable ratio is
-CAPPED (2.0, or 4.0 when the pre-session loadavg corroborates an
-external tenant), and a ratio past the 1.4 alarm line must carry a
-standalone best-of-3 re-measure block of the whole basket before the
-gate may pass.  This makes a plan regression (an accidental cartesian,
-a lost broadcast, a global sort) red in the test suite as soon as a
-bench has recorded it — without re-running the 6-minute bench inside
-pytest.
+Reads the newest full-suite bench sidecar (BENCH_DETAIL_c{cpus}.json,
+written by bench.py) and asserts the established "intrinsic tail only"
+property on raw readings: no single query over the 10 s line, and the
+suite mean under 1.3 s/query.  This makes a plan regression (an
+accidental cartesian, a lost broadcast, a global sort) red in the test
+suite as soon as a bench has recorded it — without re-running the
+multi-minute bench inside pytest.  Those tests skip when no sidecar
+exists (fresh clone).
 
-Skips when no sidecar exists (fresh clone) or when it predates the
-budget field (pre-round-5 record).
+`test_bench_subset_end_to_end` runs bench.py itself on three cheap
+headline queries at the smallest fixture and checks its printed-line
+contract.
 """
 
 from __future__ import annotations
 
 import json
+import os
+import subprocess
+import sys
 from pathlib import Path
 
 import pytest
 
-_DETAIL = Path(__file__).resolve().parent.parent / "BENCH_DETAIL.json"
+from .conftest import SF_SMOKE
+
+_REPO = Path(__file__).resolve().parent.parent
+
+#: Keys of bench.py's printed line; `failures`
+#: joins them only when the sidecar could not be written.
+_LINE_KEYS = {
+    "metric", "value", "unit", "sf", "n_queries", "n_failures", "queries",
+    "detail_file", "budget_ok", "budget_breaches",
+}
 
 
 def _load():
-    if not _DETAIL.exists():
-        pytest.skip("no BENCH_DETAIL.json recorded yet")
-    detail = json.loads(_DETAIL.read_text())
-    if "budget" not in detail:
-        pytest.skip("bench record predates the budget gate")
-    return detail
+    sidecars = sorted(
+        _REPO.glob("BENCH_DETAIL_c*.json"), key=lambda p: p.stat().st_mtime
+    )
+    if not sidecars:
+        pytest.skip("no full-suite bench sidecar recorded yet")
+    return json.loads(sidecars[-1].read_text())
 
 
 def test_no_single_query_over_budget():
@@ -51,159 +53,11 @@ def test_no_single_query_over_budget():
     )
 
 
-def test_suite_mean_under_budget_either_arm():
-    """Two-arm gate at the ORIGINAL 1.3 line: pass if the raw mean OR
-    the weather-normalized mean is inside it.  Under steady weather the
-    headline ratio is ~1 and the arms coincide, so a genuine suite-wide
-    regression fails both; weather in either direction (calm host ->
-    canaries overcorrect upward, loaded host -> they overcorrect
-    downward) can only excuse a failure, never manufacture one."""
-    detail = _load()
-    budget = detail["budget"]
-    if "normalized_per_query_s" not in budget:
-        pytest.skip("bench record predates the weather-normalized gate")
-    raw = budget["per_query_s"]
-    normalized = budget["normalized_per_query_s"]
-    limit = budget["per_query_limit_s"]
-    assert raw <= limit or normalized <= limit, (
-        f"suite mean fails BOTH arms: raw {raw} s/query and "
-        f"weather-normalized {normalized} s/query (ratio "
-        f"{budget['headline_ratio']}) both exceed the {limit} line — that is "
-        "a real suite-wide regression, not host weather"
-    )
-
-
-def test_weather_gate_shape():
-    """The normalized gate is only meaningful if the weather basket
-    actually measured: the headline ratio sits above its floor (a
-    floored ratio means the measurement was nonsense), the normalized
-    number is arithmetically per_query / gate_ratio, and the effective
-    single-query line is 10 s scaled by max(1, gate_ratio) — where
-    gate_ratio is the measured ratio CAPPED at the declared bound
-    (round 9)."""
-    detail = _load()
-    budget = detail["budget"]
-    if "headline_ratio" not in budget:
-        pytest.skip("bench record predates the weather-normalized gate")
-    ratio = budget["headline_ratio"]
-    assert ratio > budget["headline_ratio_floor"]
-    # pre-round-9 sidecars normalized by the raw (uncapped) ratio
-    gate_ratio = budget.get("gate_ratio", ratio)
-    if "gate_ratio" in budget:
-        assert gate_ratio == min(ratio, budget["ratio_cap"])
-        assert budget["ratio_cap"] in (2.0, 4.0)
-    expected = budget["per_query_s"] / gate_ratio
-    assert abs(budget["normalized_per_query_s"] - expected) < 0.002
-    assert (
-        abs(
-            budget["single_query_limit_effective_s"]
-            - 10.0 * max(1.0, gate_ratio)
-        )
-        < 0.02
-    )
-    # every headline-basket member must have been timed this run
-    missing = [
-        n for n in budget["headline_ref"] if n not in detail["queries"]
-    ]
-    assert not missing, f"headline basket incomplete: {missing}"
-
-
-def _alarm_invariant_ok(budget: dict) -> bool:
-    """The round-9 alarm invariant bench.py's ok clause encodes: a
-    headline ratio past the 1.4 alarm line may only pass the gate when
-    the sidecar carries the standalone best-of-3 re-measure block that
-    corroborated it — and the block must have actually MEASURED the
-    basket (round-10, advice #2): a headline_standalone that is empty
-    (every standalone re-run raised) or missing in-suite members is not
-    corroboration, merely evidence the alarm path executed."""
-    ratio = budget.get("headline_ratio", 1.0)
-    if ratio <= budget.get("ratio_alarm_line", 1.4):
-        return True
-    alarm = budget.get("ratio_alarm")
-    return bool(
-        alarm
-        and alarm.get("headline_standalone")
-        and alarm.get("headline_insuite")
-        and set(alarm["headline_insuite"])
-        <= set(alarm["headline_standalone"])
-    )
-
-
-def test_ratio_alarm_invariant_on_recorded_sidecar():
-    detail = _load()
-    budget = detail["budget"]
-    if "headline_ratio" not in budget:
-        pytest.skip("bench record predates the weather-normalized gate")
-    if "ratio_alarm_line" not in budget:
-        pytest.skip("bench record predates the round-9 ratio alarm")
-    if budget["ok"]:
-        assert _alarm_invariant_ok(budget), (
-            "gate passed with an uncorroborated headline ratio "
-            f"{budget['headline_ratio']} > 1.4 and no standalone "
-            "re-measure block — the alarm path was skipped"
-        )
-
-
-def test_ratio_alarm_invariant_synthetic():
-    """Alarm path on synthetic sidecars (round-9 verdict item #3): a
-    >1.4 ratio without the standalone re-measure block must be
-    rejected; the same ratio WITH the block, and any ratio under the
-    line, must be accepted."""
-    assert not _alarm_invariant_ok(
-        {"headline_ratio": 1.8, "ratio_alarm_line": 1.4, "ratio_alarm": None}
-    )
-    assert not _alarm_invariant_ok(
-        {
-            "headline_ratio": 1.8,
-            "ratio_alarm_line": 1.4,
-            "ratio_alarm": {"triggered_at": 1.8},  # block without readings
-        }
-    )
-    # Block present but every standalone re-measure FAILED (empty dict):
-    # the alarm executed without corroborating anything — reject.
-    assert not _alarm_invariant_ok(
-        {
-            "headline_ratio": 1.8,
-            "ratio_alarm_line": 1.4,
-            "ratio_alarm": {
-                "triggered_at": 1.8,
-                "headline_insuite": {"q01_pricing_summary": 1.1},
-                "headline_standalone": {},
-                "ratio_after_standalone": 1.8,
-            },
-        }
-    )
-    # Partial standalone coverage (a basket member raised standalone):
-    # the uncovered member's in-suite reading stands unverified — reject.
-    assert not _alarm_invariant_ok(
-        {
-            "headline_ratio": 1.8,
-            "ratio_alarm_line": 1.4,
-            "ratio_alarm": {
-                "triggered_at": 1.8,
-                "headline_insuite": {
-                    "q01_pricing_summary": 1.1,
-                    "q70_exact_dedup": 0.9,
-                },
-                "headline_standalone": {"q01_pricing_summary": 0.9},
-                "ratio_after_standalone": 1.8,
-            },
-        }
-    )
-    assert _alarm_invariant_ok(
-        {
-            "headline_ratio": 1.8,
-            "ratio_alarm_line": 1.4,
-            "ratio_alarm": {
-                "triggered_at": 2.1,
-                "headline_insuite": {"q01_pricing_summary": 1.1},
-                "headline_standalone": {"q01_pricing_summary": 0.9},
-                "ratio_after_standalone": 1.8,
-            },
-        }
-    )
-    assert _alarm_invariant_ok(
-        {"headline_ratio": 1.12, "ratio_alarm_line": 1.4, "ratio_alarm": None}
+def test_suite_mean_under_budget():
+    budget = _load()["budget"]
+    assert budget["per_query_s"] <= budget["per_query_limit_s"], (
+        f"suite mean {budget['per_query_s']} s/query exceeds the "
+        f"{budget['per_query_limit_s']} line"
     )
 
 
@@ -212,124 +66,33 @@ def test_bench_recorded_no_failures():
     assert not detail["failures"], detail["failures"]
 
 
-@pytest.mark.slow
-def test_ratio_alarm_path_end_to_end(tmp_path):
-    """Execute the alarm path for real (round-9): a subset bench with
-    the pinned references scaled down 100x must cross the 1.4 line,
-    run the standalone best-of-3 basket re-measure, and land the full
-    ratio_alarm block in the subset sidecar with the capped gate
-    ratio.  Uses cheap non-streaming headline queries at sf0.001 so
-    the whole subprocess stays under ~2 min; the knob only rescales
-    the reference epoch, so every line of the alarm machinery that a
-    genuinely degraded round would hit runs here.  600 s subprocess
-    headroom (round-10, advice #3): a contended host is exactly when
-    the alarm path does its extra standalone work."""
-    import json
-    import os
-    import subprocess
-    import sys
-
-    if not os.path.isdir("/root/testdata/sf0.001"):
-        pytest.skip("sf0.001 fixture dir not present on this machine")
-    repo = Path(__file__).resolve().parent.parent
-    subset = "q01_pricing_summary,q40_topk_per_group,q70_exact_dedup,qc14_paragraph_dedup,qp1_training_data_pipeline"
+def test_bench_subset_end_to_end():
+    """bench.py on a BENCH_QUERIES subset: the last stdout line parses,
+    carries exactly the contract keys and stays under 1 KB, and the
+    subset sidecar records min <= median for every query."""
+    subset = ["q01_pricing_summary", "q40_topk_per_group", "q70_exact_dedup"]
     env = {
         **os.environ,
-        "BENCH_QUERIES": subset,
-        "BENCH_RATIO_REF_SCALE": "0.01",
-        "SPARK_GRAFT_SF_DIR": "/root/testdata/sf0.001",
-        "SPARK_GRAFT_CPUS": "8",
+        "BENCH_QUERIES": ",".join(subset),
+        "SPARK_GRAFT_SF_DIR": SF_SMOKE,
+        "SPARK_GRAFT_CPUS": "2",
+        # a second JVM beside the test session's: keep its heap small
+        "SPARK_DRIVER_MEMORY": "1g",
     }
     proc = subprocess.run(
-        [sys.executable, str(repo / "bench.py")],
+        [sys.executable, str(_REPO / "bench.py")],
         env=env, capture_output=True, text=True, timeout=600,
     )
-    assert proc.returncode == 0, proc.stderr[-500:]
-    sidecar = json.loads((repo / "BENCH_DETAIL_SUBSET.json").read_text())
-    budget = sidecar["budget"]
-    assert budget["headline_ratio"] > 1.4, budget["headline_ratio"]
-    alarm = budget["ratio_alarm"]
-    assert alarm and alarm["triggered_at"] > 1.4
-    assert set(alarm["headline_insuite"]) == set(alarm["headline_standalone"])
-    assert alarm["headline_standalone"], "standalone re-measure empty"
-    # min-substitution: final timings can never exceed the in-suite read
-    for n, t in alarm["headline_standalone"].items():
-        assert sidecar["queries"][n] <= alarm["headline_insuite"][n] + 1e-9
-    # the gate ratio is capped even though the raw ratio is huge
-    assert budget["gate_ratio"] == min(
-        budget["headline_ratio"], budget["ratio_cap"]
-    )
-    assert budget["gate_ratio"] <= 4.0
-    assert _alarm_invariant_ok(budget)
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    line = proc.stdout.strip().splitlines()[-1]
+    assert len(line.encode()) < 1024, len(line.encode())
+    out = json.loads(line)
+    assert set(out) == _LINE_KEYS, sorted(out)
+    assert out["n_queries"] == 3 and out["n_failures"] == 0
+    assert set(out["queries"]) == set(subset)
+    assert out["detail_file"] == "BENCH_DETAIL_SUBSET.json"
 
-
-def test_select_suspects_policy():
-    """Round-10 suspects pass: selection is excess-ranked, floor-guarded
-    (sub-second noise never qualifies), cost-capped, and silent on
-    queries without an epoch entry."""
-    import bench
-
-    epoch = {
-        "a_heavy": 4.0,
-        "b_light": 0.2,
-        "c_mid": 1.0,
-        "d_regressed": 2.0,
-    }
-    timings = {
-        "a_heavy": 9.0,       # excess 5.0, 2.25x -> suspect
-        "b_light": 0.45,      # 2.25x but +0.25 s < 0.3 floor -> NOT suspect
-        "c_mid": 1.35,        # +0.35 s but 1.35x < 1.5x -> NOT suspect
-        "d_regressed": 7.0,   # excess 5.0 -> suspect
-        "e_new": 30.0,        # no epoch entry -> never a suspect
-    }
-    got = bench.select_suspects(timings, epoch)
-    assert set(got) == {"a_heavy", "d_regressed"}
-    # excess-ranked: both have excess 5.0 -> tuple sort falls back to
-    # name desc; make the ordering property explicit with unequal excess
-    timings["d_regressed"] = 12.0
-    assert bench.select_suspects(timings, epoch)[0] == "d_regressed"
-    # cost cap: expected cost 2x epoch each; budget 5 s fits only the
-    # top suspect (2*2.0=4.0; adding a_heavy's 8.0 would blow it)
-    assert bench.select_suspects(timings, epoch, cost_budget_s=5.0) == [
-        "d_regressed"
-    ]
-    # count cap
-    assert len(bench.select_suspects(timings, epoch, max_n=1)) == 1
-    # empty epoch -> no suspects ever
-    assert bench.select_suspects(timings, {}) == []
-
-
-def test_epoch_file_shape():
-    """BENCH_EPOCH.json (when present) must be consumable by
-    load_epoch: a {queries: {name: seconds}} map whose keys are all
-    currently-registered queries — a stale key means a query was
-    renamed/retired without re-running the full bench."""
-    import bench
-
-    path = Path(__file__).resolve().parent.parent / "BENCH_EPOCH.json"
-    if not path.exists():
-        pytest.skip("no epoch recorded yet")
-    epoch = bench.load_epoch(str(path))
-    assert epoch, "epoch file present but unreadable"
-    assert all(
-        isinstance(v, float) and 0 < v < 600 for v in epoch.values()
-    )
-    from spark_ml_optimization_spark import registry
-
-    registered = set(registry.all_queries())
-    stale = sorted(set(epoch) - registered)
-    assert not stale, f"epoch keys not in registry: {stale}"
-
-
-def test_suite_remeasure_block_shape():
-    """When the recorded sidecar carries a suspects-pass block, its raw
-    and remeasured maps must cover the same queries and the kept value
-    can only be <= the raw in-suite reading (min-substitution)."""
-    detail = _load()
-    block = detail["budget"].get("suite_remeasure")
-    if not block:
-        pytest.skip("no suite_remeasure block in the recorded sidecar")
-    assert set(block["raw"]) == set(block["remeasured"])
-    for n, kept in block["remeasured"].items():
-        assert kept <= block["raw"][n] + 1e-9
-    assert block["mean_after"] <= block["mean_before"] + 1e-9
+    sidecar = json.loads((_REPO / out["detail_file"]).read_text())
+    assert set(sidecar["queries"]) == set(sidecar["median"]) == set(subset)
+    for name in subset:
+        assert sidecar["queries"][name] <= sidecar["median"][name], name

@@ -9,7 +9,13 @@ from __future__ import annotations
 
 import math
 
-from scale_bench import FIXTURE_ARM, REPLICA_ARM, SHIFT_COLS, fit_exponent
+from scale_bench import (
+    FIXTURE_ARM,
+    REPLICA_ARM,
+    SHIFT_COLS,
+    fit_exponent,
+    replica_suffix,
+)
 
 
 def test_fit_exponent_recovers_known_slopes():
@@ -180,3 +186,16 @@ def test_round10_new_heavies_in_arms():
         assert name not in FIXTURE_ARM, name
     assert "q84l_distributional_similarity" in FIXTURE_ARM
     assert "q84l_distributional_similarity" not in REPLICA_ARM
+
+
+def test_replica_tokens_never_collide():
+    """Content replicas stay lexically disjoint: no suffixed token equals
+    a base token or another replica's token, even for alphanumeric base
+    tokens that end like a suffix ("ar1" = "a" + "r1" without the
+    separator)."""
+    base = {"a", "ar1", "ar11", "a1", "row", "spark"}
+    seen = set(base)
+    for r in range(1, 13):
+        tokens = {t + replica_suffix(r) for t in base}
+        assert not tokens & seen, (r, sorted(tokens & seen))
+        seen |= tokens

@@ -249,3 +249,23 @@ def test_sentinel_driven_twins_on_an_empty_fixture(spark, tmp_path):
         "st24_stream_late_data_drop",
     ):
         assert all_queries()[name].fn(spark, sf_dir).count() == 0, name
+
+
+def test_drift_monitor_counts_events_without_a_reference(spark, tmp_path):
+    """st12 with no reference rows (no event_id % 3 == 0): the decile
+    edges, the reference bin counts and the PSI join are all empty, yet
+    each monitoring row must still carry its micro-batch's row count
+    (psi_total is then NULL)."""
+    import pyarrow as pa
+
+    sf_dir = _events_fixture(
+        tmp_path, lambda t: pa.array(t["event_id"].to_numpy() % 3 != 0)
+    )
+    ids = spark.read.parquet(f"{sf_dir}/events.parquet").select("event_id")
+    batch_rows = sorted(
+        ids.filter(f"event_id % 3 = {m}").count() for m in (1, 2)
+    )
+    rows = all_queries()["st12_stream_drift_monitor"].fn(spark, sf_dir).collect()
+    got = [r["n_events"] for r in rows]
+    assert None not in got and sorted(got) == batch_rows, rows
+    assert all(r["n_batches"] == 2 and r["psi_total"] is None for r in rows)

@@ -6,9 +6,9 @@ NOT part of the driver contract (bench.py is) — this is the workbench:
     python tools/qtime.py q72c_minhash_portable qp5_dedup_funnel \
         --repeat 3 --sf /root/testdata/sf0.1 --plan plans/r11/x_before.txt
 
-Times each named query standalone (streams stopped, caches dropped,
-full GC between queries, best-of-N collect — the judge's adjudication
-protocol), optionally writing .explain('formatted') output per query.
+Times each named query standalone with bench.py's `measure` (streams
+stopped, caches dropped and a full GC before each query, then best-of-N
+collect), optionally writing .explain('formatted') output per query.
 """
 
 from __future__ import annotations
@@ -17,10 +17,10 @@ import argparse
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import measure  # noqa: E402
 from spark_ml_optimization_spark import registry  # noqa: E402
 from spark_ml_optimization_spark.session import get_spark  # noqa: E402
 
@@ -56,23 +56,8 @@ def main() -> int:
                 os.path.join(args.plan_dir, f"{name}_{args.plan_suffix}.txt"), "w"
             ) as fh:
                 fh.write(plan)
-        best = None
-        times = []
-        for _ in range(args.repeat):
-            try:
-                for sq in spark.streams.active:
-                    sq.stop()
-                spark.catalog.clearCache()
-                spark.sparkContext._jvm.System.gc()
-            except Exception:
-                pass
-            spark.sparkContext.setJobDescription(f"qtime:{name}")
-            t0 = time.perf_counter()
-            q.fn(spark, args.sf).collect()
-            dt = time.perf_counter() - t0
-            times.append(round(dt, 3))
-            best = dt if best is None else min(best, dt)
-        out[name] = {"best": round(best, 3), "runs": times}
+        runs = measure(spark, name, q.fn, args.sf, args.repeat, gc=True)
+        out[name] = {"best": round(min(runs), 3), "runs": [round(dt, 3) for dt in runs]}
         print(json.dumps({name: out[name]}), flush=True)
     print(json.dumps(out))
     return 0
