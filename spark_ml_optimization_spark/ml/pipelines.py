@@ -17,12 +17,10 @@ The tuning knobs this module exercises — the "optimization" surface:
 
 from __future__ import annotations
 
-import tempfile
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import scratch
 from ..functions.vector import to_double_array
 from ..registry import register
 from ..sources import load_table, spread
@@ -332,12 +330,12 @@ def ml07_model_persistence(spark: SparkSession, sf_dir: str) -> DataFrame:
     data = _labeled_embeddings(spark, sf_dir)
     lr = LogisticRegression(maxIter=10, regParam=0.1, family="multinomial")
     model = lr.fit(data)
-    path = f"{tempfile.gettempdir()}/ml07_{uuid.uuid4().hex[:12]}"
-    model.write().overwrite().save(path)
-    reloaded = LogisticRegressionModel.load(path)
-    p1 = model.transform(data).select("vec_id", F.col("prediction").alias("p1"))
-    p2 = reloaded.transform(data).select("vec_id", F.col("prediction").alias("p2"))
-    agree = p1.join(p2, "vec_id").filter(F.col("p1") == F.col("p2")).count()
+    with scratch.scoped("ml07_") as path:
+        model.write().overwrite().save(path)
+        reloaded = LogisticRegressionModel.load(path)
+        p1 = model.transform(data).select("vec_id", F.col("prediction").alias("p1"))
+        p2 = reloaded.transform(data).select("vec_id", F.col("prediction").alias("p2"))
+        agree = p1.join(p2, "vec_id").filter(F.col("p1") == F.col("p2")).count()
     total = data.count()
     return spark.createDataFrame(
         [(total, agree, agree == total)],

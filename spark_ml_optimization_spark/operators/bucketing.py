@@ -13,12 +13,11 @@ Exchange-free plan mechanically.
 from __future__ import annotations
 
 import os
-import tempfile
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import scratch
 from ..registry import register
 from ..sources import load_table
 
@@ -32,7 +31,7 @@ def _ensure_bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]
     if not _WAREHOUSE.get(sf_dir):
         # warehouse.dir is a static conf — use EXTERNAL bucketed tables
         # (explicit path) so no warehouse location is required.
-        base = os.path.join(tempfile.gettempdir(), f"bucketed_{uuid.uuid4().hex[:8]}")
+        base = scratch.path("bucketed", sf_dir)
         li = load_table(spark, sf_dir, "lineitem").select(
             "l_orderkey", "l_extendedprice", "l_discount"
         )

@@ -29,8 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .. import api
-from ..registry import register
+from .. import api, scratch
+from ..registry import SF_ORACLE, register
 from ..sources import load_table
 
 #: n-gram width for contamination checks.  Real decontamination uses
@@ -525,27 +525,27 @@ def qc12_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _zorder_write_dir(sf_dir: str) -> str:
-    import os
-    import tempfile
-    import uuid
-
-    # rstrip: the oracle bakes the same key at import time — a trailing
-    # slash from the caller must not fork the scratch dir.
-    key = f"zorder_{sf_dir.rstrip('/').replace('/', '_')}"
-    if key not in _ZORDER_DIRS:
-        _ZORDER_DIRS[key] = os.path.join(
-            tempfile.gettempdir(), f"{key}_{uuid.uuid4().hex[:10]}"
-        )
-    return _ZORDER_DIRS[key]
-
-
-_ZORDER_DIRS: dict[str, str] = {}
+def qc13_oracle_for(sf_dir: str) -> str:
+    """Render qc13's layout-audit oracle against the scratch dir for a
+    given fixture scale.  The REGISTERED oracle bakes the driver's
+    correctness scale (sf0.01); cross-scale tests re-render via this
+    helper so the audit reads the files Spark actually wrote for THAT
+    scale instead of silently comparing two different datasets."""
+    return f"""
+        SELECT
+            parse_filename(filename) AS fname,
+            count(*) AS n_rows,
+            min(x) AS min_x, max(x) AS max_x,
+            min(y) AS min_y, max(y) AS max_y,
+            min(z) AS min_z, max(z) AS max_z
+        FROM read_parquet('{scratch.path("zorder", sf_dir)}/*.parquet', filename=true)
+        GROUP BY 1
+    """
 
 
 @register(
     "qc13_zorder_file_stats",
-    oracle=None,  # rendered per-sf below (path baked into the SQL)
+    oracle=qc13_oracle_for(SF_ORACLE),
     doc="The Z-order layout MATERIALIZED: lineitem keys are Morton-"
     "encoded (qc12's bit interleave), range-partitioned into 4 files on "
     "z, sorted within each file, and written as parquet — then read "
@@ -562,7 +562,7 @@ _ZORDER_DIRS: dict[str, str] = {}
 def qc13_zorder_file_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
-    out = _zorder_write_dir(sf_dir)
+    out = scratch.path("zorder", sf_dir)
     if not os.path.isdir(out):
         li = load_table(spark, sf_dir, "lineitem")
         coded = li.select(
@@ -591,38 +591,6 @@ def qc13_zorder_file_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("z").alias("min_z"),
         F.max("z").alias("max_z"),
     )
-
-
-def qc13_oracle_for(sf_dir: str) -> str:
-    """Render qc13's layout-audit oracle against the scratch dir for a
-    given fixture scale.  The REGISTERED oracle bakes the driver's
-    correctness scale (sf0.01); cross-scale tests re-render via this
-    helper so the audit reads the files Spark actually wrote for THAT
-    scale instead of silently comparing two different datasets."""
-    return f"""
-        SELECT
-            parse_filename(filename) AS fname,
-            count(*) AS n_rows,
-            min(x) AS min_x, max(x) AS max_x,
-            min(y) AS min_y, max(y) AS max_y,
-            min(z) AS min_z, max(z) AS max_z
-        FROM read_parquet('{_zorder_write_dir(sf_dir)}/*.parquet', filename=true)
-        GROUP BY 1
-    """
-
-
-def _qc13_oracle() -> str:
-    return qc13_oracle_for("/root/testdata/sf0.01")
-
-
-from .. import registry as _registry_mod  # noqa: E402
-
-_registry_mod._REGISTRY["qc13_zorder_file_stats"] = _registry_mod.Query(
-    name="qc13_zorder_file_stats",
-    fn=_registry_mod._REGISTRY["qc13_zorder_file_stats"].fn,
-    oracle=_qc13_oracle(),
-    doc=_registry_mod._REGISTRY["qc13_zorder_file_stats"].doc,
-)
 
 
 #: Words per paragraph-unit for corpus-level chunk dedup (qc14).  Real
@@ -821,72 +789,11 @@ def qc17_bitmap_exact_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_COMPACT_DIRS: dict[str, str] = {}
-
-
-def _compact_dir(sf_dir: str, stage: str) -> str:
-    key = f"compact_{stage}_{sf_dir.rstrip('/').replace('/', '_')}"
-    if key not in _COMPACT_DIRS:
-        import os
-        import tempfile
-        import uuid
-
-        _COMPACT_DIRS[key] = os.path.join(
-            tempfile.gettempdir(), f"{key}_{uuid.uuid4().hex[:10]}"
-        )
-    return _COMPACT_DIRS[key]
-
-
-@register(
-    "qc18_small_file_compaction",
-    oracle=None,  # rendered per-sf below (scratch paths baked into the SQL)
-    doc="Small-file compaction (the OPTIMIZE step every long-lived "
-    "100 TB table needs): a fragmented write (repartition(64) — the "
-    "shape incremental ingest leaves behind) is compacted by "
-    "re-writing through repartition(4), and BOTH layouts are audited "
-    "via the _metadata.file_name hidden column: file count, rows per "
-    "layout, min/max rows per file.  The oracle re-counts the actual "
-    "on-disk files with DuckDB read_parquet(filename=true) — an "
-    "engine-independent proof the compaction happened and lost "
-    "nothing.  Fragmented reads pay per-file open cost + footer reads "
-    "+ scheduler overhead (and at cloud-storage latency, per-file "
-    "round trips); compaction is one shuffle whose output size is "
-    "controlled by spark.sql.files.maxRecordsPerFile / target "
-    "partition count.",
-)
-def qc18_small_file_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
-    frag = _compact_dir(sf_dir, "frag")
-    comp = _compact_dir(sf_dir, "comp")
-    if not os.path.isdir(frag):
-        o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
-        o.repartition(64).write.mode("overwrite").parquet(frag)
-    if not os.path.isdir(comp):
-        spark.read.parquet(frag).repartition(4).write.mode("overwrite").parquet(comp)
-
-    def audit(path: str, stage: str) -> DataFrame:
-        per_file = (
-            spark.read.parquet(path)
-            .groupBy(F.col("_metadata.file_name").alias("f"))
-            .agg(F.count("*").alias("n"))
-        )
-        return per_file.agg(
-            F.lit(stage).alias("stage"),
-            F.count("*").alias("n_files"),
-            F.sum("n").cast("long").alias("n_rows"),
-            F.min("n").cast("long").alias("min_rows_per_file"),
-            F.max("n").cast("long").alias("max_rows_per_file"),
-        )
-
-    return audit(frag, "fragmented").unionByName(audit(comp, "compacted"))
-
-
 def qc18_oracle_for(sf_dir: str) -> str:
     """Render qc18's file-audit oracle against this scale's scratch dirs
     (same per-sf pattern as qc13_oracle_for)."""
-    frag = _compact_dir(sf_dir, "frag")
-    comp = _compact_dir(sf_dir, "comp")
+    frag = scratch.path("compact_frag", sf_dir)
+    comp = scratch.path("compact_comp", sf_dir)
     return f"""
         WITH f AS (
             SELECT filename, count(*) AS n
@@ -908,12 +815,49 @@ def qc18_oracle_for(sf_dir: str) -> str:
     """
 
 
-_registry_mod._REGISTRY["qc18_small_file_compaction"] = _registry_mod.Query(
-    name="qc18_small_file_compaction",
-    fn=_registry_mod._REGISTRY["qc18_small_file_compaction"].fn,
-    oracle=qc18_oracle_for("/root/testdata/sf0.01"),
-    doc=_registry_mod._REGISTRY["qc18_small_file_compaction"].doc,
+@register(
+    "qc18_small_file_compaction",
+    oracle=qc18_oracle_for(SF_ORACLE),
+    doc="Small-file compaction (the OPTIMIZE step every long-lived "
+    "100 TB table needs): a fragmented write (repartition(64) — the "
+    "shape incremental ingest leaves behind) is compacted by "
+    "re-writing through repartition(4), and BOTH layouts are audited "
+    "via the _metadata.file_name hidden column: file count, rows per "
+    "layout, min/max rows per file.  The oracle re-counts the actual "
+    "on-disk files with DuckDB read_parquet(filename=true) — an "
+    "engine-independent proof the compaction happened and lost "
+    "nothing.  Fragmented reads pay per-file open cost + footer reads "
+    "+ scheduler overhead (and at cloud-storage latency, per-file "
+    "round trips); compaction is one shuffle whose output size is "
+    "controlled by spark.sql.files.maxRecordsPerFile / target "
+    "partition count.",
 )
+def qc18_small_file_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
+    import os
+
+    frag = scratch.path("compact_frag", sf_dir)
+    comp = scratch.path("compact_comp", sf_dir)
+    if not os.path.isdir(frag):
+        o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
+        o.repartition(64).write.mode("overwrite").parquet(frag)
+    if not os.path.isdir(comp):
+        spark.read.parquet(frag).repartition(4).write.mode("overwrite").parquet(comp)
+
+    def audit(path: str, stage: str) -> DataFrame:
+        per_file = (
+            spark.read.parquet(path)
+            .groupBy(F.col("_metadata.file_name").alias("f"))
+            .agg(F.count("*").alias("n"))
+        )
+        return per_file.agg(
+            F.lit(stage).alias("stage"),
+            F.count("*").alias("n_files"),
+            F.sum("n").cast("long").alias("n_rows"),
+            F.min("n").cast("long").alias("min_rows_per_file"),
+            F.max("n").cast("long").alias("max_rows_per_file"),
+        )
+
+    return audit(frag, "fragmented").unionByName(audit(comp, "compacted"))
 
 
 #: Global token budget for the mixture-allocation demo (fixture-scaled;
@@ -2151,8 +2095,6 @@ def hamilton_quota(counts: DataFrame, budget: int) -> DataFrame:
         .cast("long")
         .alias("quota"),
     )
-
-
 
 
 @register(

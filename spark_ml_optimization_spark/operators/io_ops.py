@@ -13,59 +13,16 @@ interchange only and always carry explicit schemas.
 from __future__ import annotations
 
 import os
-import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .. import scratch
 from ..registry import register
 from ..session import scoped_conf
 from ..sources import load_table
-
-
-def sweep_stale_scratch(prefix: str, max_age_s: float = 86400.0) -> None:
-    """Remove tmpdir scratch dirs named `<prefix><uuid>` left by PRIOR
-    invocations of path-writing queries (src28's lifecycle tables,
-    q37e's WAP dirs) — round-8 advice: repeated runs accumulated
-    orphans because the result DataFrame reads the dir lazily AFTER
-    the query function returns, so the owning run can never delete its
-    own dir.  Each run instead sweeps predecessors, age-gated so a
-    CONCURRENT session's dirs are never touched.  The gate is 24 h
-    (round-9 advice #5): the original 1 h protected in-flight WRITES
-    but not pending lazy READS — a returned DataFrame may re-scan its
-    scratch dir much later (a cached plan re-collected, a long-lived
-    interactive session), and every session class on this box (driver
-    round, pytest run, bench) lives well under 24 h, so age alone now
-    covers both hazards.  Best-effort by design: a failed sweep must
-    not fail the query."""
-    import shutil
-    import time
-
-    root = tempfile.gettempdir()
-    try:
-        entries = os.listdir(root)
-    except OSError:
-        return
-    cutoff = time.time() - max_age_s
-    for name in entries:
-        if not name.startswith(prefix):
-            continue
-        p = os.path.join(root, name)
-        try:
-            if os.path.isdir(p) and os.path.getmtime(p) < cutoff:
-                shutil.rmtree(p, ignore_errors=True)
-        except OSError:
-            continue
-
-_SCRATCH: dict[str, str] = {}
-
-
-def _scratch(key: str) -> str:
-    if key not in _SCRATCH:
-        _SCRATCH[key] = os.path.join(tempfile.gettempdir(), f"{key}_{uuid.uuid4().hex[:10]}")
-    return _SCRATCH[key]
 
 
 @register(
@@ -77,7 +34,7 @@ def _scratch(key: str) -> str:
 )
 def src01_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = load_table(spark, sf_dir, "nation")
-    path = _scratch(f"csv_nation_{sf_dir.replace('/', '_')}")
+    path = scratch.path("csv_nation", sf_dir)
     n.write.mode("overwrite").option("header", True).csv(path)
     schema = T.StructType(
         [
@@ -97,7 +54,7 @@ def src01_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def src02_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_name", "s_nationkey")
-    path = _scratch(f"json_supplier_{sf_dir.replace('/', '_')}")
+    path = scratch.path("json_supplier", sf_dir)
     s.write.mode("overwrite").json(path)
     schema = T.StructType(
         [
@@ -130,7 +87,7 @@ def src03_partitioned_parquet_sink(spark: SparkSession, sf_dir: str) -> DataFram
     o = load_table(spark, sf_dir, "orders").withColumn(
         "order_year", F.year("o_orderdate").cast("int")
     )
-    path = _scratch(f"pq_orders_{sf_dir.replace('/', '_')}")
+    path = scratch.path("pq_orders", sf_dir)
     o.write.mode("overwrite").partitionBy("order_year").parquet(path)
     back = spark.read.parquet(path).filter(F.col("order_year") == 1997)
     return back.groupBy(F.col("order_year").cast("long").alias("order_year"), "o_orderstatus").agg(
@@ -150,7 +107,7 @@ def src07_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = load_table(spark, sf_dir, "part").select(
         "p_partkey", "p_brand", "p_size", "p_retailprice"
     )
-    path = _scratch(f"orc_part_{sf_dir.replace('/', '_')}")
+    path = scratch.path("orc_part", sf_dir)
     p.write.mode("overwrite").orc(path)
     schema = T.StructType(
         [
@@ -189,9 +146,9 @@ def src08_dynamic_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFra
     o = load_table(spark, sf_dir, "orders").withColumn(
         "order_year", F.year("o_orderdate").cast("int")
     )
-    fact_path = _scratch(f"dpp_orders_{sf_dir.replace('/', '_')}")
+    fact_path = scratch.path("dpp_orders", sf_dir)
     o.write.mode("overwrite").partitionBy("order_year").parquet(fact_path)
-    dim_path = _scratch(f"dpp_years_{sf_dir.replace('/', '_')}")
+    dim_path = scratch.path("dpp_years", sf_dir)
     # Fixture orders span 1995-2001 (measured at sf0.01 and sf0.1).
     years = [(y, "modern" if y >= 1996 else "classic") for y in range(1995, 2002)]
     spark.createDataFrame(years, "yr int, era string").write.mode("overwrite").parquet(dim_path)
@@ -221,9 +178,9 @@ def src08_dynamic_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFra
 )
 def src09_jdbc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Keep Derby's log out of the repo checkout.
-    spark._jvm.System.setProperty("derby.stream.error.file", "/tmp/derby.log")
+    spark._jvm.System.setProperty("derby.stream.error.file", scratch.path("derby.log"))
     n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name", "n_regionkey")
-    db = _scratch(f"derby_nation_{sf_dir.replace('/', '_')}")
+    db = scratch.path("derby_nation", sf_dir)
     url = f"jdbc:derby:{db};create=true"
     props = {"driver": "org.apache.derby.jdbc.EmbeddedDriver"}
     n.write.mode("overwrite").jdbc(url, "nation_t", properties=props)
@@ -265,7 +222,7 @@ def src09_jdbc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def src10_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
-    path = _scratch(f"evolve_orders_{sf_dir.replace('/', '_')}")
+    path = scratch.path("evolve_orders", sf_dir)
     o.filter(F.year("o_orderdate") == 1996).select(
         "o_orderkey", "o_totalprice"
     ).write.mode("overwrite").parquet(os.path.join(path, "batch=1"))
@@ -425,11 +382,12 @@ def src12_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _binfile_fixture(key: str, n_files: int = 8) -> str:
+def _binfile_fixture(n_files: int = 8) -> str:
     """Deterministic raw-binary media fixture: n small .bin files whose
     bytes are a fixed arithmetic pattern — stands in for image/audio
-    payloads arriving OUTSIDE any tabular format."""
-    path = _scratch(key)
+    payloads arriving OUTSIDE any tabular format.  The bytes do not
+    depend on the fixture scale, so every scale shares one copy."""
+    path = scratch.path("binfiles")
     if not os.path.isdir(path):
         os.makedirs(path, exist_ok=True)
         for i in range(n_files):
@@ -441,7 +399,13 @@ def _binfile_fixture(key: str, n_files: int = 8) -> str:
 
 @register(
     "src13_binaryfile_ingest",
-    oracle=None,  # filled in below — path depends on the scratch dir
+    oracle=f"""
+        SELECT
+            parse_filename(filename) AS fname,
+            size AS length,
+            md5(hex(content)) AS digest
+        FROM read_blob('{scratch.path("binfiles")}/*.bin')
+    """,
     doc="Raw-media ingestion via the binaryFile source: whole files "
     "become (path, modificationTime, length, content BINARY) rows — the "
     "entry point that turns an object-store bucket of images/audio into "
@@ -455,47 +419,16 @@ def _binfile_fixture(key: str, n_files: int = 8) -> str:
     "decode-later.",
 )
 def src13_binaryfile_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # rstrip: the oracle bakes the same key at import time — a trailing
-    # slash from the caller must not fork the scratch dir.
-    path = _binfile_fixture(f"binfiles_{sf_dir.rstrip('/').replace('/', '_')}")
     raw = (
         spark.read.format("binaryFile")
         .option("pathGlobFilter", "*.bin")
-        .load(path)
+        .load(_binfile_fixture())
     )
     return raw.select(
         F.element_at(F.split("path", "/"), -1).alias("fname"),
         F.col("length"),
         F.md5(F.hex("content")).alias("digest"),
     )
-
-
-def _src13_oracle() -> str:
-    # The scratch dir must exist (and be keyed) before the oracle string
-    # is rendered; the driver always calls queries() before oracle_sql()
-    # comparisons, but render defensively for any sf the driver uses.
-    paths = {
-        sf: _binfile_fixture(f"binfiles__root_testdata_sf{sf}")
-        for sf in ("0.001", "0.01", "0.1")
-    }
-    # The driver compares at sf0.01; pytest fixtures use the same dir key.
-    return f"""
-        SELECT
-            parse_filename(filename) AS fname,
-            size AS length,
-            md5(hex(content)) AS digest
-        FROM read_blob('{paths["0.01"]}/*.bin')
-    """
-
-
-from .. import registry as _registry_mod  # noqa: E402
-
-_registry_mod._REGISTRY["src13_binaryfile_ingest"] = _registry_mod.Query(
-    name="src13_binaryfile_ingest",
-    fn=_registry_mod._REGISTRY["src13_binaryfile_ingest"].fn,
-    oracle=_src13_oracle(),
-    doc=_registry_mod._REGISTRY["src13_binaryfile_ingest"].doc,
-)
 
 
 @register(
@@ -514,7 +447,7 @@ def src14_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_name", "c_nationkey", "c_mktsegment"
     )
-    path = _scratch(f"xml_customer_{sf_dir.rstrip('/').replace('/', '_')}")
+    path = scratch.path("xml_customer", sf_dir)
     c.write.format("xml").option("rowTag", "customer").mode("overwrite").save(path)
     schema = T.StructType(
         [
@@ -562,7 +495,7 @@ def src15_permissive_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("s_acctbal").cast("string")
         ),
     )
-    path = _scratch(f"dirty_csv_{sf_dir.rstrip('/').replace('/', '_')}")
+    path = scratch.path("dirty_csv", sf_dir)
     s.select(line.alias("value")).write.mode("overwrite").text(path)
     schema = T.StructType(
         [
@@ -623,7 +556,7 @@ if avro_connector_available():
         p = load_table(spark, sf_dir, "part").select(
             "p_partkey", "p_brand", "p_size", "p_retailprice"
         )
-        path = _scratch(f"avro_part_{sf_dir.replace('/', '_')}")
+        path = scratch.path("avro_part", sf_dir)
         p.write.mode("overwrite").format("avro").save(path)
         schema = T.StructType(
             [
@@ -664,7 +597,7 @@ def src17_recursive_glob_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").withColumn(
         "yr", F.year("o_orderdate").cast("int")
     )
-    path = _scratch(f"nested_orders_{sf_dir.replace('/', '_')}")
+    path = scratch.path("nested_orders", sf_dir)
     if not os.path.isdir(path):
         # Two-level nested tree via partitionBy on DERIVED copies (yr,
         # st), so every original column — o_orderstatus included — stays
@@ -743,8 +676,7 @@ def src20_python_datasource_writer(spark: SparkSession, sf_dir: str) -> DataFram
         .option("partitions", "4")
         .load()
     )
-    out_dir = os.path.join(tempfile.gettempdir(), f"src20_{uuid.uuid4().hex[:12]}")
-    os.makedirs(out_dir)
+    out_dir = scratch.fresh("src20_")
     base.write.format("rowsink").option("path", out_dir).mode("append").save()
     with open(os.path.join(out_dir, "_manifest.json")) as f:
         manifest = json.load(f)  # bounded sink metadata, not a data path
@@ -801,7 +733,7 @@ def src21_dynamic_partition_overwrite(
     base = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type"
     )
-    path = _scratch(f"dynpo_events_{sf_dir.replace('/', '_')}")
+    path = scratch.path("dynpo_events", sf_dir)
     base.write.mode("overwrite").partitionBy("event_type").parquet(path)
     correction = (
         base.filter(
@@ -852,7 +784,7 @@ def src22_csv_dialect_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("noisy"),
         "c_acctbal",
     )
-    path = _scratch(f"csv_dialect_{sf_dir.replace('/', '_')}")
+    path = scratch.path("csv_dialect", sf_dir)
     (
         noisy.write.mode("overwrite")
         .option("header", True)
@@ -906,7 +838,7 @@ def src23_format_fidelity_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
             T.StructField("n_regionkey", T.IntegerType()),
         ]
     )
-    base = _scratch(f"fidelity_{sf_dir.replace('/', '_')}")
+    base = scratch.path("fidelity", sf_dir)
     cur = n.select(
         F.col("n_nationkey").cast("int"),
         "n_name",
@@ -961,7 +893,7 @@ def src24_parquet_codec_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
     out = None
     for codec in ["gzip", "snappy", "uncompressed", "zstd"]:
-        path = _scratch(f"codec_{codec}_{sf_dir.replace('/', '_')}")
+        path = scratch.path(f"codec_{codec}", sf_dir)
         o.write.mode("overwrite").option("compression", codec).parquet(path)
         back = spark.read.parquet(path)
         cents = F.round(F.col("o_totalprice") * 100).cast("long")
@@ -1021,7 +953,7 @@ def src25_fixed_width_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("o_orderpriority"),
         ).alias("value")
     )
-    path = _scratch(f"fixed_width_{sf_dir.replace('/', '_')}")
+    path = scratch.path("fixed_width", sf_dir)
     lines.write.mode("overwrite").text(path)
     raw = spark.read.text(path)
     return raw.select(
@@ -1066,7 +998,7 @@ def src26_linesep_text_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         ).alias("value")
     )
-    path = _scratch(f"linesep_{sf_dir.replace('/', '_')}")
+    path = scratch.path("linesep", sf_dir)
     one_line.coalesce(1).write.mode("overwrite").text(path)
     raw = spark.read.option("lineSep", ";").text(path)
     parsed = raw.filter(F.length(F.trim("value")) > 0).select(
@@ -1116,7 +1048,7 @@ def src27_multiline_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("folded"),
         "c_acctbal",
     )
-    path = _scratch(f"csv_multiline_{sf_dir.replace('/', '_')}")
+    path = scratch.path("csv_multiline", sf_dir)
     (
         folded.write.mode("overwrite")
         .option("header", True)
@@ -1178,19 +1110,13 @@ def src28_managed_table_lifecycle(
         F.year("o_orderdate").cast("bigint").alias("yr"),
     )
     o.createOrReplaceTempView("src28_src")
-    # uuid-suffixed table name + predecessor sweep (round-8 advice):
-    # a FIXED catalog name raced between concurrent sessions sharing a
-    # warehouse, and per-run uuid dirs accumulated as orphans.  Each
-    # run now owns a unique table, drops prior src28 registrations
-    # from this session's catalog, and sweeps stale dirs age-gated.
-    # (Catalog registrations are session-scoped here — in-memory
-    # catalog, no shared metastore — so per-run names cost nothing and
-    # CANNOT be swept without racing a concurrent run's read; only the
-    # on-disk dirs persist, and the sweep handles those.)
-    run_id = uuid.uuid4().hex[:10]
-    tbl = f"src28_lifecycle_{run_id}"
-    path = os.path.join(tempfile.gettempdir(), f"src28_{run_id}")
-    sweep_stale_scratch("src28_")
+    # uuid-suffixed table name: a FIXED catalog name raced between
+    # concurrent sessions sharing a warehouse.  (Catalog registrations
+    # are session-scoped here — in-memory catalog, no shared metastore
+    # — so per-run names cost nothing.)  The result reads the table dir
+    # lazily after return, so it lives in a fresh dir until exit.
+    tbl = f"src28_lifecycle_{uuid.uuid4().hex[:10]}"
+    path = scratch.fresh("src28_")
     spark.sql(f"DROP TABLE IF EXISTS {tbl}")
     cols = (
         "o_orderkey, o_orderstatus, o_totalprice, yr"

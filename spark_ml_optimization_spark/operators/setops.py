@@ -12,7 +12,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..registry import register
+from .. import scratch
+from ..registry import SF_ORACLE, register
 from ..sources import load_table
 
 
@@ -304,26 +305,11 @@ def q30c_keyset_pagination(spark: SparkSession, sf_dir: str) -> DataFrame:
 # vectors / OPTIMIZE are emulated relationally over plain parquet — the
 # SEMANTICS and plan shapes below are exactly what the table format runs.)
 
-_LAKE_DIRS: dict[str, str] = {}
-
 #: A file group is rewritten by compaction once >=15% of its rows are
 #: dead (deletion-vector'd); below that, the reader keeps applying the
 #: DV.  Compared integer-exactly (n_dead*100 >= n_total*15) so both
 #: engines make the same call on boundary groups.
 _LAKE_REWRITE_PCT = 15
-
-
-def _lake_dir(sf_dir: str, stage: str) -> str:
-    key = f"lake_{stage}_{sf_dir.rstrip('/').replace('/', '_')}"
-    if key not in _LAKE_DIRS:
-        import os
-        import tempfile
-        import uuid
-
-        _LAKE_DIRS[key] = os.path.join(
-            tempfile.gettempdir(), f"{key}_{uuid.uuid4().hex[:10]}"
-        )
-    return _LAKE_DIRS[key]
 
 
 def _lake_flags():
@@ -337,9 +323,60 @@ def _lake_flags():
     return is_del, is_upd
 
 
+def q37b_oracle_for(sf_dir: str) -> str:
+    """Render q37b's audit oracle against this scale's scratch dirs —
+    DuckDB re-reads the SAME hive-partitioned base and snapshot files
+    Spark wrote and re-derives the DV + compaction decision."""
+    base = scratch.path("lake_base", sf_dir)
+    snap = scratch.path("lake_snap", sf_dir)
+    return f"""
+        WITH base AS (
+            SELECT o_orderkey, price, o_orderstatus,
+                   CAST(file_grp AS INT) AS file_grp
+            FROM read_parquet('{base}/*/*.parquet', hive_partitioning=true)
+        ),
+        flags AS (
+            SELECT *,
+                   (o_orderkey % 16 < 2) AS is_del,
+                   (o_orderstatus = 'P' AND o_orderkey % 16 >= 2) AS is_upd
+            FROM base
+        ),
+        stats AS (
+            SELECT file_grp, count(*) AS n_total,
+                   count(CASE WHEN is_del OR is_upd THEN 1 END) AS n_dead,
+                   sum(CASE WHEN NOT (is_del OR is_upd)
+                            THEN CAST(round(price * 100) AS BIGINT)
+                            ELSE 0 END) AS live_cents
+            FROM flags GROUP BY file_grp
+        ),
+        kept AS (
+            SELECT file_grp, 'kept+dv' AS stage,
+                   CAST(n_total - n_dead AS BIGINT) AS n_live,
+                   CAST(n_dead AS BIGINT) AS n_dead,
+                   CAST(live_cents AS BIGINT) AS live_cents
+            FROM stats
+            WHERE n_dead * 100 < n_total * {_LAKE_REWRITE_PCT}
+        ),
+        snap AS (
+            SELECT CAST(file_grp AS INT) AS file_grp,
+                   CASE WHEN CAST(file_grp AS INT) = -1 THEN 'appended'
+                        ELSE 'rewritten' END AS stage,
+                   CAST(count(*) AS BIGINT) AS n_live,
+                   CAST(0 AS BIGINT) AS n_dead,
+                   CAST(sum(CAST(round(price * 100) AS BIGINT)) AS BIGINT)
+                       AS live_cents
+            FROM read_parquet('{snap}/*/*.parquet', hive_partitioning=true)
+            GROUP BY 1
+        )
+        SELECT * FROM kept
+        UNION ALL
+        SELECT * FROM snap
+    """
+
+
 @register(
     "q37b_merge_delete_compact",
-    oracle=None,  # rendered per-sf below (scratch paths baked into the SQL)
+    oracle=q37b_oracle_for(SF_ORACLE),
     doc="End-to-end lakehouse maintenance cycle emulated on plain "
     "parquet (no Delta/Iceberg jars in this image — SURVEY §2.1 gate): "
     "(1) base table written as 8 hive-partitioned file groups; (2) a "
@@ -360,8 +397,8 @@ def _lake_flags():
 def q37b_merge_delete_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
-    base_dir = _lake_dir(sf_dir, "base")
-    snap_dir = _lake_dir(sf_dir, "snap")
+    base_dir = scratch.path("lake_base", sf_dir)
+    snap_dir = scratch.path("lake_snap", sf_dir)
     is_del, is_upd = _lake_flags()
     is_dead = is_del | is_upd
     if not os.path.isdir(base_dir):
@@ -427,169 +464,12 @@ def q37b_merge_delete_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     return kept.unionByName(snap_stats)
 
 
-def q37b_oracle_for(sf_dir: str) -> str:
-    """Render q37b's audit oracle against this scale's scratch dirs —
-    DuckDB re-reads the SAME hive-partitioned base and snapshot files
-    Spark wrote and re-derives the DV + compaction decision."""
-    base = _lake_dir(sf_dir, "base")
-    snap = _lake_dir(sf_dir, "snap")
-    return f"""
-        WITH base AS (
-            SELECT o_orderkey, price, o_orderstatus,
-                   CAST(file_grp AS INT) AS file_grp
-            FROM read_parquet('{base}/*/*.parquet', hive_partitioning=true)
-        ),
-        flags AS (
-            SELECT *,
-                   (o_orderkey % 16 < 2) AS is_del,
-                   (o_orderstatus = 'P' AND o_orderkey % 16 >= 2) AS is_upd
-            FROM base
-        ),
-        stats AS (
-            SELECT file_grp, count(*) AS n_total,
-                   count(CASE WHEN is_del OR is_upd THEN 1 END) AS n_dead,
-                   sum(CASE WHEN NOT (is_del OR is_upd)
-                            THEN CAST(round(price * 100) AS BIGINT)
-                            ELSE 0 END) AS live_cents
-            FROM flags GROUP BY file_grp
-        ),
-        kept AS (
-            SELECT file_grp, 'kept+dv' AS stage,
-                   CAST(n_total - n_dead AS BIGINT) AS n_live,
-                   CAST(n_dead AS BIGINT) AS n_dead,
-                   CAST(live_cents AS BIGINT) AS live_cents
-            FROM stats
-            WHERE n_dead * 100 < n_total * {_LAKE_REWRITE_PCT}
-        ),
-        snap AS (
-            SELECT CAST(file_grp AS INT) AS file_grp,
-                   CASE WHEN CAST(file_grp AS INT) = -1 THEN 'appended'
-                        ELSE 'rewritten' END AS stage,
-                   CAST(count(*) AS BIGINT) AS n_live,
-                   CAST(0 AS BIGINT) AS n_dead,
-                   CAST(sum(CAST(round(price * 100) AS BIGINT)) AS BIGINT)
-                       AS live_cents
-            FROM read_parquet('{snap}/*/*.parquet', hive_partitioning=true)
-            GROUP BY 1
-        )
-        SELECT * FROM kept
-        UNION ALL
-        SELECT * FROM snap
-    """
-
-
-from .. import registry as _registry_mod  # noqa: E402
-
-_registry_mod._REGISTRY["q37b_merge_delete_compact"] = _registry_mod.Query(
-    name="q37b_merge_delete_compact",
-    fn=_registry_mod._REGISTRY["q37b_merge_delete_compact"].fn,
-    oracle=q37b_oracle_for("/root/testdata/sf0.01"),
-    doc=_registry_mod._REGISTRY["q37b_merge_delete_compact"].doc,
-)
-
-
-@register(
-    "q37c_time_travel",
-    oracle=None,  # rendered per-sf below (scratch paths baked into the SQL)
-    doc="Lakehouse TIME TRAVEL emulated over q37b's physical snapshots — "
-    "version-pinned reads of the same logical table at three points of "
-    "its history, each reconstructed from the REAL files on disk: v0 "
-    "(pre-MERGE: the base file groups as written), v1 (post-MERGE, "
-    "pre-compaction: base + deletion vectors + the appended delta "
-    "group — exactly what `VERSION AS OF 1` resolves to in Delta/"
-    "Iceberg: old data files plus DV sidecars plus new delta files), "
-    "v2 (post-compaction: kept groups + DV + rewritten/appended "
-    "groups).  Per version: row count, cents-exact live sum, an "
-    "ORDER-FREE CONTENT DIGEST (qd30's md5-ascii-pair integer sum over "
-    "key|cents — proves v1 and v2 contain bit-identical logical rows, "
-    "not just equal counts), and dead-rows-still-on-disk (the "
-    "compaction delta: v1 carries every DV'd row physically, v2 only "
-    "those in below-threshold groups).  The v1==v2 digest equality IS "
-    "the snapshot-isolation law a table format must uphold through "
-    "OPTIMIZE; hash-verified cross-engine from the same parquet.  "
-    "Scale: version resolution is manifest arithmetic + file-pruned "
-    "reads — no shuffle grows with history length.",
-)
-def q37c_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Materialize q37b's base + snapshot files if this session hasn't.
-    q37b_merge_delete_compact(spark, sf_dir)
-    base_dir = _lake_dir(sf_dir, "base")
-    snap_dir = _lake_dir(sf_dir, "snap")
-    is_del, is_upd = _lake_flags()
-    is_dead = is_del | is_upd
-    base = spark.read.parquet(base_dir).select(
-        "o_orderkey", "price", "o_orderstatus",
-        F.col("file_grp").cast("int").alias("file_grp"),
-    )
-    snap = spark.read.parquet(snap_dir).select(
-        "o_orderkey", "price", F.col("file_grp").cast("int").alias("file_grp")
-    )
-    cents = F.round(F.col("price") * 100).cast("long").alias("cents")
-    stats = base.groupBy("file_grp").agg(
-        F.count("*").alias("n_total"),
-        F.count(F.when(is_dead, 1)).alias("n_dead"),
-    )
-    keptg = stats.filter(
-        F.col("n_dead") * 100 < F.col("n_total") * _LAKE_REWRITE_PCT
-    ).select("file_grp")
-
-    v0 = base.select("o_orderkey", cents)
-    v1 = (
-        base.filter(~is_dead)
-        .select("o_orderkey", cents)
-        .unionByName(snap.filter(F.col("file_grp") == -1).select("o_orderkey", cents))
-    )
-    v2 = (
-        base.join(F.broadcast(keptg), "file_grp")
-        .filter(~is_dead)
-        .select("o_orderkey", cents)
-        .unionByName(snap.select("o_orderkey", cents))
-    )
-    # qd30's engine-portable md5-ascii-pair integer (STRING spelling for
-    # Spark; the oracle renders the identical arithmetic with VARCHAR).
-    _m = (
-        "md5(CAST(o_orderkey AS STRING) || '|' || CAST(cents AS STRING))"
-    )
-    digest = F.expr(
-        f"(ascii(substr({_m}, 1, 1)) * 256 + ascii(substr({_m}, 2, 1)))"
-    )
-
-    def _summarize(df: DataFrame, version: int, files_read: str) -> DataFrame:
-        return df.agg(
-            F.lit(version).cast("int").alias("version"),
-            F.lit(files_read).alias("files_read"),
-            F.count("*").cast("long").alias("n_rows"),
-            F.sum("cents").cast("long").alias("live_cents"),
-            F.sum(digest).cast("long").alias("content_digest"),
-        )
-
-    dead_v1 = base.filter(is_dead).count()
-    dead_v2 = (
-        base.join(F.broadcast(keptg), "file_grp").filter(is_dead).count()
-    )
-    out = (
-        _summarize(v0, 0, "base")
-        .withColumn("dead_rows_on_disk", F.lit(0).cast("long"))
-        .unionByName(
-            _summarize(v1, 1, "base+dv+delta").withColumn(
-                "dead_rows_on_disk", F.lit(dead_v1).cast("long")
-            )
-        )
-        .unionByName(
-            _summarize(v2, 2, "kept+dv+snap").withColumn(
-                "dead_rows_on_disk", F.lit(dead_v2).cast("long")
-            )
-        )
-    )
-    return out
-
-
 def q37c_oracle_for(sf_dir: str) -> str:
     """Render q37c's time-travel oracle against this scale's scratch
     dirs — DuckDB re-reads the SAME base + snapshot parquet and
     re-derives every version's row set independently."""
-    base = _lake_dir(sf_dir, "base")
-    snap = _lake_dir(sf_dir, "snap")
+    base = scratch.path("lake_base", sf_dir)
+    snap = scratch.path("lake_snap", sf_dir)
     dig = (
         "(ascii(substr(md5(CAST(o_orderkey AS VARCHAR) || '|' "
         "|| CAST(cents AS VARCHAR)), 1, 1)) * 256 "
@@ -668,12 +548,100 @@ def q37c_oracle_for(sf_dir: str) -> str:
     """
 
 
-_registry_mod._REGISTRY["q37c_time_travel"] = _registry_mod.Query(
-    name="q37c_time_travel",
-    fn=_registry_mod._REGISTRY["q37c_time_travel"].fn,
-    oracle=q37c_oracle_for("/root/testdata/sf0.01"),
-    doc=_registry_mod._REGISTRY["q37c_time_travel"].doc,
+@register(
+    "q37c_time_travel",
+    oracle=q37c_oracle_for(SF_ORACLE),
+    doc="Lakehouse TIME TRAVEL emulated over q37b's physical snapshots — "
+    "version-pinned reads of the same logical table at three points of "
+    "its history, each reconstructed from the REAL files on disk: v0 "
+    "(pre-MERGE: the base file groups as written), v1 (post-MERGE, "
+    "pre-compaction: base + deletion vectors + the appended delta "
+    "group — exactly what `VERSION AS OF 1` resolves to in Delta/"
+    "Iceberg: old data files plus DV sidecars plus new delta files), "
+    "v2 (post-compaction: kept groups + DV + rewritten/appended "
+    "groups).  Per version: row count, cents-exact live sum, an "
+    "ORDER-FREE CONTENT DIGEST (qd30's md5-ascii-pair integer sum over "
+    "key|cents — proves v1 and v2 contain bit-identical logical rows, "
+    "not just equal counts), and dead-rows-still-on-disk (the "
+    "compaction delta: v1 carries every DV'd row physically, v2 only "
+    "those in below-threshold groups).  The v1==v2 digest equality IS "
+    "the snapshot-isolation law a table format must uphold through "
+    "OPTIMIZE; hash-verified cross-engine from the same parquet.  "
+    "Scale: version resolution is manifest arithmetic + file-pruned "
+    "reads — no shuffle grows with history length.",
 )
+def q37c_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # Materialize q37b's base + snapshot files if this session hasn't.
+    q37b_merge_delete_compact(spark, sf_dir)
+    base_dir = scratch.path("lake_base", sf_dir)
+    snap_dir = scratch.path("lake_snap", sf_dir)
+    is_del, is_upd = _lake_flags()
+    is_dead = is_del | is_upd
+    base = spark.read.parquet(base_dir).select(
+        "o_orderkey", "price", "o_orderstatus",
+        F.col("file_grp").cast("int").alias("file_grp"),
+    )
+    snap = spark.read.parquet(snap_dir).select(
+        "o_orderkey", "price", F.col("file_grp").cast("int").alias("file_grp")
+    )
+    cents = F.round(F.col("price") * 100).cast("long").alias("cents")
+    stats = base.groupBy("file_grp").agg(
+        F.count("*").alias("n_total"),
+        F.count(F.when(is_dead, 1)).alias("n_dead"),
+    )
+    keptg = stats.filter(
+        F.col("n_dead") * 100 < F.col("n_total") * _LAKE_REWRITE_PCT
+    ).select("file_grp")
+
+    v0 = base.select("o_orderkey", cents)
+    v1 = (
+        base.filter(~is_dead)
+        .select("o_orderkey", cents)
+        .unionByName(snap.filter(F.col("file_grp") == -1).select("o_orderkey", cents))
+    )
+    v2 = (
+        base.join(F.broadcast(keptg), "file_grp")
+        .filter(~is_dead)
+        .select("o_orderkey", cents)
+        .unionByName(snap.select("o_orderkey", cents))
+    )
+    # qd30's engine-portable md5-ascii-pair integer (STRING spelling for
+    # Spark; the oracle renders the identical arithmetic with VARCHAR).
+    _m = (
+        "md5(CAST(o_orderkey AS STRING) || '|' || CAST(cents AS STRING))"
+    )
+    digest = F.expr(
+        f"(ascii(substr({_m}, 1, 1)) * 256 + ascii(substr({_m}, 2, 1)))"
+    )
+
+    def _summarize(df: DataFrame, version: int, files_read: str) -> DataFrame:
+        return df.agg(
+            F.lit(version).cast("int").alias("version"),
+            F.lit(files_read).alias("files_read"),
+            F.count("*").cast("long").alias("n_rows"),
+            F.sum("cents").cast("long").alias("live_cents"),
+            F.sum(digest).cast("long").alias("content_digest"),
+        )
+
+    dead_v1 = base.filter(is_dead).count()
+    dead_v2 = (
+        base.join(F.broadcast(keptg), "file_grp").filter(is_dead).count()
+    )
+    out = (
+        _summarize(v0, 0, "base")
+        .withColumn("dead_rows_on_disk", F.lit(0).cast("long"))
+        .unionByName(
+            _summarize(v1, 1, "base+dv+delta").withColumn(
+                "dead_rows_on_disk", F.lit(dead_v1).cast("long")
+            )
+        )
+        .unionByName(
+            _summarize(v2, 2, "kept+dv+snap").withColumn(
+                "dead_rows_on_disk", F.lit(dead_v2).cast("long")
+            )
+        )
+    )
+    return out
 
 
 @register(
@@ -895,8 +863,6 @@ def q37d_write_conflict_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q37e_write_audit_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import tempfile
-    import uuid
 
     o = load_table(spark, sf_dir, "orders")
     slice_df = o.filter(F.year("o_orderdate") == 1995).select(
@@ -904,13 +870,8 @@ def q37e_write_audit_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderstatus",
         F.round(F.col("o_totalprice") * 100).cast("bigint").alias("cents"),
     )
-    from .io_ops import sweep_stale_scratch
-
-    # Result reads the published dir lazily after return, so this run
-    # can't delete its own dir — sweep predecessors instead (age-gated
-    # against concurrent sessions; round-8 advice on orphan wap_* dirs).
-    sweep_stale_scratch("wap_")
-    base = os.path.join(tempfile.gettempdir(), f"wap_{uuid.uuid4().hex[:10]}")
+    # The result reads the published dir lazily after return.
+    base = scratch.fresh("wap_")
     staging, published = os.path.join(base, "staging"), os.path.join(
         base, "published"
     )

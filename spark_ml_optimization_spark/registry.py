@@ -21,6 +21,11 @@ from pyspark.sql import DataFrame, SparkSession
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
+#: Fixture dir of the scale every registered oracle is compared at.
+#: Oracles that audit the files a query wrote bake this scale's scratch
+#: paths; tests at another scale re-render them (``*_oracle_for``).
+SF_ORACLE = "/root/testdata/sf0.01"
+
 #: Operator modules that register queries on import.
 _MODULES = (
     "spark_ml_optimization_spark.operators.relational",
@@ -78,16 +83,7 @@ def _load() -> None:
     if _LOADED:
         return
     for mod in _MODULES:
-        try:
-            importlib.import_module(mod)
-        except ModuleNotFoundError as e:
-            # Module not built yet (incremental rounds) — only swallow
-            # when the missing module IS the operator module being loaded.
-            # A typo'd internal import inside an operator module must
-            # raise, or its whole query family would silently vanish from
-            # the driver contract (round-1 advice).
-            if e.name != mod:
-                raise
+        importlib.import_module(mod)
     _LOADED = True
 
 

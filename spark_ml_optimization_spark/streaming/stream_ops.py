@@ -25,15 +25,14 @@ from __future__ import annotations
 
 import os
 import shutil
-import tempfile
 import uuid
 from collections.abc import Sequence
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .. import scratch
 from ..registry import register
 from ..session import configure, scoped_conf
 from ..sources.io import normalize_events_ts
@@ -63,21 +62,6 @@ def _stage_events(sf_dir: str, dst_dir: str) -> None:
         shutil.copyfile(src, dst)
 
 
-@contextmanager
-def _scratch(prefix: str, sf_dir: str | None = None):
-    """A per-invocation scratch dir, holding the staged events fixture
-    when ``sf_dir`` is given.  Removed on exit: the result lives in the
-    memory sink, so source, driver-batch and checkpoint files are dead
-    weight that suite and bench runs would otherwise leak."""
-    base = tempfile.mkdtemp(prefix=prefix)
-    try:
-        if sf_dir is not None:
-            _stage_events(sf_dir, base)
-        yield base
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-
-
 def _read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     configure(spark)
     schema = _EVENTS_STREAM_SCHEMA.get(sf_dir)
@@ -87,8 +71,10 @@ def _read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         raw_batch = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
         schema = _EVENTS_STREAM_SCHEMA[sf_dir] = raw_batch.schema
     if sf_dir not in _STAGE_CACHE:
-        _STAGE_CACHE[sf_dir] = tempfile.mkdtemp(prefix="events_stream_")
-        _stage_events(sf_dir, _STAGE_CACHE[sf_dir])
+        stage = scratch.path("events_stream", sf_dir)
+        os.makedirs(stage, exist_ok=True)
+        _stage_events(sf_dir, stage)
+        _STAGE_CACHE[sf_dir] = stage
     raw = spark.readStream.schema(schema).parquet(_STAGE_CACHE[sf_dir])
     # Watermarks demand TIMESTAMP (EVENT_TIME_IS_NOT_ON_TIMESTAMP_TYPE on
     # ntz); session TZ is pinned UTC so the instant matches the batch
@@ -578,7 +564,7 @@ def st06_stateful_apply_in_pandas(spark: SparkSession, sf_dir: str) -> DataFrame
 )
 def st05_stream_foreach_batch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = _read_events_stream(spark, sf_dir)
-    out_dir = os.path.join(tempfile.gettempdir(), f"st05_{uuid.uuid4().hex[:12]}")
+    out_dir = scratch.fresh("st05_")
     enriched = events.select(
         "event_id", "user_id", "event_type", F.get_json_object("props", "$.k").cast("int").alias("k")
     )
@@ -650,7 +636,8 @@ def _watermarked_outer_stream_join(
     ``how`` is 'left_outer' (st09) or 'full_outer' (st21)."""
     configure(spark)
     raw = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-    with _scratch("st09_", sf_dir) as base:
+    with scratch.scoped("st09_") as base:
+        _stage_events(sf_dir, base)
         stream = _events_stream(spark, raw.schema, base)
         purchases = (
             stream.filter(F.col("event_type") == "purchase")
@@ -738,7 +725,7 @@ def _watermarked_outer_stream_join(
 )
 def st10_stream_upsert_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = _read_events_stream(spark, sf_dir)
-    serve_dir = os.path.join(tempfile.gettempdir(), f"st10_{uuid.uuid4().hex[:12]}")
+    serve_dir = os.path.join(scratch.fresh("st10_"), "serve")
     per_user = events.select("user_id", "ts")
 
     def merge_epoch(batch_df: DataFrame, epoch_id: int) -> None:
@@ -808,7 +795,7 @@ def _promote(split_dir: str, dst: str) -> None:
 )
 def st11_checkpoint_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
     configure(spark)
-    base = os.path.join(tempfile.gettempdir(), f"st11_{uuid.uuid4().hex[:12]}")
+    base = scratch.fresh("st11_")
     src_dir = os.path.join(base, "src")
     ckpt_dir = os.path.join(base, "ckpt")
     sink_dir = os.path.join(base, "sink")
@@ -927,7 +914,7 @@ def st11_checkpoint_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def st12_stream_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     configure(spark)
-    base = os.path.join(tempfile.gettempdir(), f"st12_{uuid.uuid4().hex[:12]}")
+    base = scratch.fresh("st12_")
     src_dir = os.path.join(base, "src")
     sink_dir = os.path.join(base, "sink")
     os.makedirs(src_dir)
@@ -1055,7 +1042,7 @@ def st13_stream_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
     events = _read_events_stream(spark, sf_dir)
-    base = os.path.join(tempfile.gettempdir(), f"st13_{uuid.uuid4().hex[:12]}")
+    base = scratch.fresh("st13_")
     state = {"version": -1}
 
     def merge_epoch(batch_df: DataFrame, epoch_id: int) -> None:
@@ -1122,7 +1109,7 @@ def _stage_incoming_docs(spark: SparkSession, sf_dir: str) -> str:
     if sf_dir not in _INGEST_STAGE_CACHE:
         from ..sources import load_table
 
-        dst = tempfile.mkdtemp(prefix="incoming_docs_")
+        dst = scratch.path("incoming_docs", sf_dir)
         (
             load_table(spark, sf_dir, "documents")
             .select(
@@ -1410,7 +1397,7 @@ def st17_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def st18_available_now_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     configure(spark)
-    base = os.path.join(tempfile.gettempdir(), f"st18_{uuid.uuid4().hex[:12]}")
+    base = scratch.fresh("st18_")
     src_dir = os.path.join(base, "src")
     ckpt_dir = os.path.join(base, "ckpt")
     sink_dir = os.path.join(base, "sink")
@@ -1709,7 +1696,8 @@ def st21_stream_stream_full_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 def st22_stream_chained_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     configure(spark)
     raw = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-    with _scratch("st22_", sf_dir) as base:
+    with scratch.scoped("st22_") as base:
+        _stage_events(sf_dir, base)
         stream = _events_stream(spark, raw.schema, base)
         lvl1 = (
             stream.withWatermark("ts", "10 minutes")
@@ -1832,7 +1820,8 @@ def st23_stream_static_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 def st24_stream_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     configure(spark)
     raw = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-    with _scratch("st24_", sf_dir) as base:
+    with scratch.scoped("st24_") as base:
+        _stage_events(sf_dir, base)
         agg = (
             _events_stream(spark, raw.schema, base)
             .withWatermark("ts", "10 minutes")
@@ -1941,7 +1930,7 @@ def _stateful_restart_recovery(
     configure(spark)
     raw = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
     name = f"mem_{uuid.uuid4().hex[:12]}"
-    with _scratch("st25_") as base:
+    with scratch.scoped("st25_") as base:
         src_dir = os.path.join(base, "src")
         ckpt_dir = os.path.join(base, "ckpt")
         raw.filter(F.col("event_id") % 2 == 0).write.parquet(
@@ -2036,9 +2025,7 @@ def st27_stream_ann_cell_route(spark: SparkSession, sf_dir: str) -> DataFrame:
     # files; the stream reads them with the staged footer schema.
     key = f"st27_{sf_dir}"
     if key not in _INGEST_STAGE_CACHE:
-        stage = os.path.join(
-            tempfile.gettempdir(), f"st27_{uuid.uuid4().hex[:10]}"
-        )
+        stage = scratch.path("st27_stage", sf_dir)
         e.filter(F.col("vec_id") % 97 == 1).write.mode("overwrite").parquet(
             stage
         )
@@ -2085,7 +2072,7 @@ def st27_stream_ann_cell_route(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def st28_dual_sink_fanout(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = _read_events_stream(spark, sf_dir)
-    base = os.path.join(tempfile.gettempdir(), f"st28_{uuid.uuid4().hex[:12]}")
+    base = scratch.fresh("st28_")
     serving_dir = os.path.join(base, "serving")
     audit_dir = os.path.join(base, "audit")
     proj = events.select(
@@ -2248,7 +2235,7 @@ def st30_offset_replay_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     import json
 
     configure(spark)
-    base = os.path.join(tempfile.gettempdir(), f"st30_{uuid.uuid4().hex[:12]}")
+    base = scratch.fresh("st30_")
     src_dir = os.path.join(base, "src")
     ckpt_dir = os.path.join(base, "ckpt")
     out_dir = os.path.join(base, "out")

@@ -1,6 +1,8 @@
 """Post-commit fast lane: the FULL SQL-oracle parity matrix at sf0.001
-as ONE test, with the Spark side fanned across a thread pool (concurrent
-actions share the local[32] scheduler; DuckDB runs per-thread cursors).
+as ONE test, with the Spark side fanned across a thread pool of
+``fastlane_workers(spark)`` threads, two per scheduler slot and at most
+16 (concurrent actions share the session's local[N] scheduler; DuckDB
+runs per-thread cursors).
 
 Rationale (round-2 judge item #6): the driver samples a different
 50-query subset each round, so the only defense is keeping every oracle
@@ -10,9 +12,8 @@ debugging; this lane gives wall-clock speed for the commit loop:
 
     python -m pytest tests/test_parity_fastlane.py -q
 
-Measured: ~78 s for 225 oracles at 16 workers (vs ~161 s parametrized
-serial, ~490 s full suite).  On failure it reports every failing query,
-not just the first.
+Measured: 221 s for the 499 oracles at 8 workers on a 4-core / 15 GB
+host.  On failure it reports every failing query, not just the first.
 """
 
 from __future__ import annotations

@@ -165,3 +165,41 @@ def test_session_conf_changes_only_through_session_module():
         and ("conf.set(" in p.read_text() or "conf.unset(" in p.read_text())
     ]
     assert not offenders, offenders
+
+
+def test_scratch_locations_only_through_scratch_module():
+    """Package code picks a temp location only via scratch.py, which
+    puts every engine-written file under one per-process root removed
+    at exit.  session.py keeps the package zip in the shared temp dir:
+    it is content-addressed and reused across processes.  Hand-made
+    temp dirs elsewhere had no owner to remove them."""
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / (
+        "spark_ml_optimization_spark"
+    )
+    offenders = [
+        str(p)
+        for p in pkg.rglob("*.py")
+        if p.name not in ("scratch.py", "session.py")
+        and ("gettempdir(" in p.read_text() or "mkdtemp(" in p.read_text())
+    ]
+    assert not offenders, offenders
+
+
+def test_registry_entries_written_only_by_register():
+    """Only registry.py writes ``_REGISTRY[...]``: an oracle that depends
+    on a scratch path is rendered above its query and passed to
+    ``@register``, not patched into the registry after the fact."""
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / (
+        "spark_ml_optimization_spark"
+    )
+    assign = re.compile(r"_REGISTRY\[[^\]]*\]\s*=(?!=)")
+    offenders = [
+        str(p)
+        for p in pkg.rglob("*.py")
+        if p.name != "registry.py" and assign.search(p.read_text())
+    ]
+    assert not offenders, offenders
