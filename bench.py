@@ -185,11 +185,12 @@ def main() -> int:
     random.Random(ORDER_SEED).shuffle(rest)
     names = head_first + rest
 
-    # Graph-family memo audit: _GRAPH_MEMO survives clearCache between
-    # queries by design, so mark which queries built a shared artifact
-    # inside their own timed window ("<artifact>:build") and which
-    # reused one an earlier query paid for ("<artifact>:hit").
-    from spark_ml_optimization_spark.operators.dedup import GRAPH_MEMO_EVENTS
+    # Artifact memo audit: session.memo survives clearCache between
+    # queries by design (graph artifacts, BPE merges, the langid
+    # confusion matrix, bucketed tables), so mark which queries built a
+    # shared artifact inside their own timed window ("<artifact>:build")
+    # and which reused one an earlier query paid for ("<artifact>:hit").
+    from spark_ml_optimization_spark.session import MEMO_EVENTS
 
     memo_annotations: dict[str, list[str]] = {}
     timings: dict[str, float] = {}
@@ -197,7 +198,7 @@ def main() -> int:
     failures: dict[str, str] = {}
     for i, name in enumerate(names):
         fn = queries[name].fn
-        memo_mark = len(GRAPH_MEMO_EVENTS)
+        memo_mark = len(MEMO_EVENTS)
         # Headline rows are the cross-round comparison anchors; a single
         # reading carries 1.4-1.7x JIT/GC noise, so they get two.
         n = max(repeat, 2) if name in HEADLINE else repeat
@@ -208,7 +209,7 @@ def main() -> int:
         else:
             timings[name] = round(min(readings), 3)
             medians[name] = round(statistics.median(readings), 3)
-        memo_events = GRAPH_MEMO_EVENTS[memo_mark:]
+        memo_events = MEMO_EVENTS[memo_mark:]
         if memo_events:
             memo_annotations[name] = sorted(
                 {f"{k}:{kind}" for k, kind in memo_events}

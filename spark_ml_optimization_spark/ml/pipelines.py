@@ -27,8 +27,10 @@ from ..sources import load_table, spread
 
 
 def _fit_retry(estimator, data, attempts: int = 3):
-    """fit() with bounded retries, for PARALLEL-fitting estimators only
-    (OneVsRest/CrossValidator with parallelism > 1).
+    """fit() with bounded retries, for PARALLEL fits only
+    (OneVsRest/CrossValidator/TrainValidationSplit with parallelism > 1,
+    and fits the caller runs on a thread pool, like similarity's PQ
+    codebooks).
 
     Spark 4.1's multi-threaded fit path can die with a transient
     `NumberFormatException: Cannot parse null string` when concurrent
@@ -1806,7 +1808,7 @@ def ml30_rf_feature_importances(spark: SparkSession, sf_dir: str) -> DataFrame:
     rf = RandomForestClassifier(
         numTrees=20, maxDepth=5, seed=42, featuresCol="features", labelCol="label"
     )
-    model = _fit_retry(rf, vec.transform(feats))
+    model = rf.fit(vec.transform(feats))
     imps = model.featureImportances.toArray().tolist()
     rows = [(name, float(round(imp, 6))) for name, imp in zip(cols, imps)]
     return spark.createDataFrame(rows, "feature string, importance double").orderBy(
@@ -2745,9 +2747,7 @@ def ml35_lda_topics(spark: SparkSession, sf_dir: str) -> DataFrame:
     feats, _ = _lda_features(spark, sf_dir)
     feats = feats.persist()
     try:
-        model = _fit_retry(
-            LDA(k=6, seed=42, maxIter=20, optimizer="online"), feats
-        )
+        model = LDA(k=6, seed=42, maxIter=20, optimizer="online").fit(feats)
         arr = vector_to_array("topicDistribution")
         scored = model.transform(feats).select(
             "lang",
@@ -2803,9 +2803,7 @@ def ml35b_lda_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     feats, cv = _lda_features(spark, sf_dir)
     feats = feats.persist()
     try:
-        model = _fit_retry(
-            LDA(k=6, seed=42, maxIter=20, optimizer="online"), feats
-        )
+        model = LDA(k=6, seed=42, maxIter=20, optimizer="online").fit(feats)
         vocab = spark.createDataFrame(
             [(i, t) for i, t in enumerate(cv.vocabulary)],
             "term_idx int, term string",
@@ -2855,9 +2853,7 @@ def ml41_gbt_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
         "features",
     )
     train, test = e.randomSplit([0.8, 0.2], seed=42)
-    model = _fit_retry(
-        GBTClassifier(maxIter=10, maxDepth=3, seed=42), train
-    )
+    model = GBTClassifier(maxIter=10, maxDepth=3, seed=42).fit(train)
     ev = BinaryClassificationEvaluator(metricName="areaUnderROC")
     rows = [
         (
@@ -2893,7 +2889,7 @@ def ml42_mlp_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     mlp = MultilayerPerceptronClassifier(
         layers=[64, 16, 10], maxIter=40, seed=42, blockSize=64
     )
-    model = _fit_retry(mlp, train)
+    model = mlp.fit(train)
     pred = model.transform(test)
     acc = MulticlassClassificationEvaluator(metricName="accuracy").evaluate(
         pred
@@ -2987,7 +2983,7 @@ def ml43_aft_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
     aft = AFTSurvivalRegression(
         censorCol="censor", quantileProbabilities=[0.5, 0.9]
     )
-    model = _fit_retry(aft, ready)
+    model = aft.fit(ready)
     probe = ready.limit(1)
     q = model.transform(
         probe.withColumnRenamed("label", "obs_label")
@@ -3029,9 +3025,7 @@ def ml44_fm_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
         "features",
     )
     train, test = e.randomSplit([0.8, 0.2], seed=42)
-    model = _fit_retry(
-        FMClassifier(factorSize=4, maxIter=30, seed=42, stepSize=0.1), train
-    )
+    model = FMClassifier(factorSize=4, maxIter=30, seed=42, stepSize=0.1).fit(train)
     ev = BinaryClassificationEvaluator(metricName="areaUnderROC")
     rows = [
         (

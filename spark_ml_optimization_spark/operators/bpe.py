@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 
 from .. import api
 from ..registry import register
+from ..session import memo
 from ..sources import load_table
 
 #: Literal merged-subword vocabulary (longest-match wins; single-char
@@ -291,12 +292,14 @@ _MERGES_UNION_SQL = "\n UNION ALL ".join(
     for r in range(1, _TRAIN_ROUNDS + 1)
 )
 
-#: (SparkSession id, sf_dir) -> lazily-checkpointed merges DataFrame,
-#: shared by qc42/qc43 so the suite trains once per fixture.
-_MERGES_MEMO: dict = {}
-
 
 def learned_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The merge table of :func:`_train_merges`, trained once per session
+    and fixture and shared by qc42/qc43 (``session.memo``)."""
+    return memo(spark, sf_dir, "learned_merges", lambda: _train_merges(spark, sf_dir))
+
+
+def _train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Train _TRAIN_ROUNDS BPE merges over the bounded word-frequency
     table — the classic Sennrich et al. loop as an iterative DataFrame
     program (the q84 PageRank template): per round, one pair-count
@@ -311,12 +314,6 @@ def learned_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     the WORD-FREQUENCY table (sublinear, Heaps' law), not the corpus;
     rounds are sequential by nature (each argmax depends on the last),
     exactly like production BPE trainers."""
-    # Keyed on applicationId, not id(spark): CPython reuses id() after
-    # GC, so a new session could inherit a dead session's checkpointed
-    # plan; applicationId is unique per SparkContext lifetime.
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _MERGES_MEMO:
-        return _MERGES_MEMO[key]
     d = load_table(spark, sf_dir, "documents")
     words = d.select(
         F.explode(F.expr("filter(split(text, ' '), w -> w != '')")).alias("w")
@@ -371,9 +368,7 @@ def learned_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = bests[0]
     for b in bests[1:]:
         out = out.unionByName(b)
-    out = out.select("round", "l", "r2", "cnt")
-    _MERGES_MEMO[key] = out
-    return out
+    return out.select("round", "l", "r2", "cnt")
 
 
 @register(

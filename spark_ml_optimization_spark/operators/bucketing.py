@@ -19,48 +19,50 @@ from pyspark.sql import functions as F
 
 from .. import scratch
 from ..registry import register
+from ..session import memo
 from ..sources import load_table
-
-_WAREHOUSE: dict[str, bool] = {}
 
 
 def _ensure_bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    """Write lineitem + orders bucketed by orderkey (once per sf_dir)."""
+    """Write lineitem + orders bucketed by orderkey (once per session and
+    sf_dir, ``session.memo``); return their catalog names."""
+    return memo(spark, sf_dir, "bucketed_tables", lambda: _write_bucketed_tables(spark, sf_dir))
+
+
+def _write_bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     key = sf_dir.replace("/", "_")
     li_tbl, o_tbl = f"li_bucketed{key}".replace(".", "_"), f"o_bucketed{key}".replace(".", "_")
-    if not _WAREHOUSE.get(sf_dir):
-        # warehouse.dir is a static conf — use EXTERNAL bucketed tables
-        # (explicit path) so no warehouse location is required.
-        base = scratch.path("bucketed", sf_dir)
-        li = load_table(spark, sf_dir, "lineitem").select(
-            "l_orderkey", "l_extendedprice", "l_discount"
-        )
-        o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderstatus")
-        # repartition(8, key) BEFORE bucketBy(8, key): both use the same
-        # murmur3 HashPartitioning, so each write task holds exactly one
-        # bucket → ONE file per bucket.  That is the precondition for
-        # Spark to trust the sortBy metadata at read time
-        # (spark.sql.legacy.bucketedTableScan.outputOrdering=true), which
-        # eliminates the SMJ's Sort nodes too — the join becomes a pure
-        # zipper merge: no shuffle AND no sort on either side
-        # (tests/test_plans.py pins both properties).
-        (
-            li.repartition(8, "l_orderkey")
-            .write.mode("overwrite")
-            .bucketBy(8, "l_orderkey")
-            .sortBy("l_orderkey")
-            .option("path", os.path.join(base, li_tbl))
-            .saveAsTable(li_tbl)
-        )
-        (
-            o.repartition(8, "o_orderkey")
-            .write.mode("overwrite")
-            .bucketBy(8, "o_orderkey")
-            .sortBy("o_orderkey")
-            .option("path", os.path.join(base, o_tbl))
-            .saveAsTable(o_tbl)
-        )
-        _WAREHOUSE[sf_dir] = True
+    # warehouse.dir is a static conf — use EXTERNAL bucketed tables
+    # (explicit path) so no warehouse location is required.
+    base = scratch.path("bucketed", sf_dir)
+    li = load_table(spark, sf_dir, "lineitem").select(
+        "l_orderkey", "l_extendedprice", "l_discount"
+    )
+    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderstatus")
+    # repartition(8, key) BEFORE bucketBy(8, key): both use the same
+    # murmur3 HashPartitioning, so each write task holds exactly one
+    # bucket → ONE file per bucket.  That is the precondition for
+    # Spark to trust the sortBy metadata at read time
+    # (spark.sql.legacy.bucketedTableScan.outputOrdering=true), which
+    # eliminates the SMJ's Sort nodes too — the join becomes a pure
+    # zipper merge: no shuffle AND no sort on either side
+    # (tests/test_plans.py pins both properties).
+    (
+        li.repartition(8, "l_orderkey")
+        .write.mode("overwrite")
+        .bucketBy(8, "l_orderkey")
+        .sortBy("l_orderkey")
+        .option("path", os.path.join(base, li_tbl))
+        .saveAsTable(li_tbl)
+    )
+    (
+        o.repartition(8, "o_orderkey")
+        .write.mode("overwrite")
+        .bucketBy(8, "o_orderkey")
+        .sortBy("o_orderkey")
+        .option("path", os.path.join(base, o_tbl))
+        .saveAsTable(o_tbl)
+    )
     return li_tbl, o_tbl
 
 

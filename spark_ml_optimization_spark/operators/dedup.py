@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import _REGISTRY, register
-from ..session import scoped_conf
+from ..session import MEMO_EVENTS, memo, scoped_conf
 from ..sources import load_table, spread
 
 
@@ -373,7 +373,7 @@ def _dup_component_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
                 break
         return labels
 
-    return _graph_memo(spark, sf_dir, "dup_components", build)
+    return memo(spark, sf_dir, "dup_components", build)
 
 
 @register(
@@ -430,38 +430,9 @@ def q74b_dup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).withColumnRenamed("node", "doc_id")
 
 
-#: Cross-query memo for the graph family's shared artifacts, keyed by
-#: (Spark application id, sf_dir, artifact).  Values are eagerly
-#: localCheckpoint-ed NARROW relations (id-only edge/label tables,
-#: never text) with >1 consumer — the BASELINE.md cache rule — so a
-#: suite run builds each artifact once instead of once per query
-#: (q84b + q84c rebuilt the same co-purchase edge list; q74b + qc21
-#: re-ran the same CC fixpoint — ~20 s combined at sf0.1).  Checkpoint
-#: blocks survive spark.catalog.clearCache() between bench queries;
-#: the module-level reference keeps the ContextCleaner from dropping
-#: them for the session's lifetime.
-_GRAPH_MEMO: dict[tuple[str, str, str], DataFrame] = {}
-
-#: Audit trail for the memo (round-11, VERDICT item 8): every access is
-#: recorded as (artifact_key, "build"|"hit") so bench.py can ANNOTATE
-#: which queries consumed a pre-built shared artifact — their per-query
-#: timings exclude the shared build the first consumer paid, and the
-#: sidecar now says so explicitly instead of leaving the judge to
-#: discover it.  Append-only; consumers snapshot by length.
-GRAPH_MEMO_EVENTS: list[tuple[str, str]] = []
-
-
-def _graph_memo(spark: SparkSession, sf_dir: str, key: str, build) -> DataFrame:
-    k = (spark.sparkContext.applicationId, sf_dir, key)
-    df = _GRAPH_MEMO.get(k)
-    if df is None:
-        # benign under the threaded fastlane: a double build is two
-        # valid checkpoints; setdefault keeps exactly one referenced.
-        df = _GRAPH_MEMO.setdefault(k, build())
-        GRAPH_MEMO_EVENTS.append((key, "build"))
-    else:
-        GRAPH_MEMO_EVENTS.append((key, "hit"))
-    return df
+#: The session memo's audit list under its older name, the same list
+#: object (never a copy), for readers written against this module.
+GRAPH_MEMO_EVENTS = MEMO_EVENTS
 
 
 def _copurchase_counted(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -488,7 +459,7 @@ def _copurchase_counted(spark: SparkSession, sf_dir: str) -> DataFrame:
             .localCheckpoint(eager=True)
         )
 
-    return _graph_memo(spark, sf_dir, "copurchase_counted", build)
+    return memo(spark, sf_dir, "copurchase_counted", build)
 
 
 def copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -505,7 +476,7 @@ def copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
             .localCheckpoint(eager=True)
         )
 
-    return _graph_memo(spark, sf_dir, "copurchase", build)
+    return memo(spark, sf_dir, "copurchase", build)
 
 
 #: Token width for duplicated-span detection (production uses 50-token
@@ -2472,7 +2443,7 @@ def strong_copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
             .localCheckpoint(eager=True)
         )
 
-    return _graph_memo(spark, sf_dir, "strong_copurchase", build)
+    return memo(spark, sf_dir, "strong_copurchase", build)
 
 
 _STRONG_EDGES_SQL = """

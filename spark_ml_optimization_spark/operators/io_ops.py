@@ -531,13 +531,11 @@ def avro_connector_available() -> bool:
 
     import pyspark
 
-    jar_dirs = [os.path.join(os.path.dirname(pyspark.__file__), "jars")]
-    extra = os.environ.get("SPARK_GRAFT_AVRO_JARS")
-    if extra:
-        jar_dirs.extend(extra.split(os.pathsep))
-    return any(
-        glob.glob(os.path.join(d, "spark-avro*.jar")) for d in jar_dirs
-    )
+    # Only pyspark's own jars/ dir is on the local JVM's classpath
+    # (get_spark sets no spark.jars), so a jar anywhere else could not
+    # serve format("avro").
+    jars = os.path.join(os.path.dirname(pyspark.__file__), "jars")
+    return bool(glob.glob(os.path.join(jars, "spark-avro*.jar")))
 
 
 if avro_connector_available():

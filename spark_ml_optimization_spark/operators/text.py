@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..registry import register
+from ..session import memo
 from ..sources import load_table
 
 
@@ -932,9 +933,6 @@ _CT_LANGID_CTES = """ grams AS (
         )"""
 
 
-_CT_MATRIX_MEMO: dict = {}
-
-
 @register(
     "q80d_cavnar_trenkle_langid",
     oracle=f"""
@@ -963,13 +961,15 @@ _CT_MATRIX_MEMO: dict = {}
     "100 TB without changing shape.",
 )
 def q80d_cavnar_trenkle_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Memoized per (session, fixture) as a lazy localCheckpoint: q80e's
-    # metrics tail reuses the materialized 25-row matrix instead of
-    # re-running the corpus trigram pass (the learned_merges pattern).
-    # applicationId, not id(spark): id() is GC-reusable across sessions.
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _CT_MATRIX_MEMO:
-        return _CT_MATRIX_MEMO[key]
+    # Memoized per session and fixture (``session.memo``): q80e's
+    # metrics tail reuses the checkpointed 25-row matrix instead of
+    # re-running the corpus trigram pass.
+    return memo(
+        spark, sf_dir, "ct_confusion_matrix", lambda: _ct_confusion_matrix(spark, sf_dir)
+    )
+
+
+def _ct_confusion_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     K = 20
     d = load_table(spark, sf_dir, "documents")
     grams = (
@@ -1033,15 +1033,13 @@ def q80d_cavnar_trenkle_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     pred = dists.groupBy("doc_id").agg(
         F.min(F.struct("dist", "cand"))["cand"].alias("predicted_lang")
     )
-    out = (
+    return (
         d.select("doc_id", "lang")
         .join(pred, "doc_id")
         .groupBy("lang", "predicted_lang")
         .agg(F.count("*").alias("n_docs"))
         .localCheckpoint(eager=True)
     )
-    _CT_MATRIX_MEMO[key] = out
-    return out
 
 
 @register(

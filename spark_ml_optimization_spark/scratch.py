@@ -1,15 +1,15 @@
 """Where the files the engine writes from Python live, and when they die.
 
-Staged fixtures, round-trip sinks, lakehouse snapshots and streaming
-sources, sinks and checkpoints all go under one directory per process,
-``$TMPDIR/spark_graft_<random>``.  It is made on first use and removed
+Staged fixtures, round-trip sinks, lakehouse snapshots, streaming
+sources, sinks and checkpoints, and the package zip shipped to
+executors (``session._ship_package``) all go under one directory per
+process, ``$TMPDIR/spark_graft_<random>``.  It is made on first use and removed
 when the process exits.  A process killed without running its exit
 hooks (SIGKILL, a SIGTERM with no handler) leaves its root behind; the
 next root made in the same ``TMPDIR`` removes sibling roots older than
 24 h.
 
-JVM-side scratch (``spark.local.dir``) and the package zip shared by
-every process (``session._ship_package``) are not placed here.
+JVM-side scratch (``spark.local.dir``) is not placed here.
 """
 
 from __future__ import annotations

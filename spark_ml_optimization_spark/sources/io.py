@@ -18,6 +18,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..session import configure
 
@@ -49,7 +50,7 @@ def table_path(sf_dir: str, name: str) -> str:
 #: time; memoizing it keeps repeat plan construction metadata-free — the
 #: same reason a 100 TB deployment reads schemas from a catalog
 #: (Hive/Iceberg/Delta) instead of re-inferring from files.
-_SCHEMA_CACHE: dict[str, "object"] = {}
+_SCHEMA_CACHE: dict[str, StructType] = {}
 
 
 def normalize_events_ts(df: DataFrame) -> DataFrame:
@@ -92,6 +93,15 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name == "events":
         df = normalize_events_ts(df)
     return df
+
+
+def raw_schema(spark: SparkSession, sf_dir: str, name: str) -> StructType:
+    """One relation's schema as its parquet footer declares it (before
+    :func:`normalize_events_ts`), from :func:`load_table`'s cache."""
+    path = table_path(sf_dir, name)
+    if path not in _SCHEMA_CACHE:
+        load_table(spark, sf_dir, name)
+    return _SCHEMA_CACHE[path]
 
 
 def spread(df: DataFrame, target: int | None = None) -> DataFrame:

@@ -35,13 +35,7 @@ from pyspark.sql import types as T
 from .. import scratch
 from ..registry import register
 from ..session import configure, scoped_conf
-from ..sources.io import normalize_events_ts
-
-#: Explicit read schemas per fixture dir — streaming sources never
-#: infer, so derive the schema once from the batch reader's footer read
-#: (which also handles the ts precision vintage, see sources/io.py).
-_EVENTS_STREAM_SCHEMA: dict[str, T.StructType] = {}
-
+from ..sources.io import normalize_events_ts, raw_schema
 
 _STAGE_CACHE: dict[str, str] = {}
 
@@ -64,12 +58,10 @@ def _stage_events(sf_dir: str, dst_dir: str) -> None:
 
 def _read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     configure(spark)
-    schema = _EVENTS_STREAM_SCHEMA.get(sf_dir)
-    if schema is None:
-        # Raw footer schema (pre-normalization) — the stream must read
-        # the file exactly as written; ts normalization happens after.
-        raw_batch = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-        schema = _EVENTS_STREAM_SCHEMA[sf_dir] = raw_batch.schema
+    # Streaming sources never infer: read the file exactly as written,
+    # with the batch reader's raw footer schema; ts normalization
+    # happens after.
+    schema = raw_schema(spark, sf_dir, "events")
     if sf_dir not in _STAGE_CACHE:
         stage = scratch.path("events_stream", sf_dir)
         os.makedirs(stage, exist_ok=True)

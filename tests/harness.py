@@ -98,3 +98,36 @@ def run_and_compare(spark, duck, fn, oracle: str, name: str, sf_dir: str) -> Non
     spark_pdf = df.toPandas()
     oracle_pdf = duck.execute(oracle).fetchdf()
     compare(spark_pdf, oracle_pdf, name)
+
+
+def oracle_for(name: str, q, sf_dir: str) -> str:
+    """``q``'s oracle SQL for ``sf_dir``.  Layout-audit oracles (qc13,
+    qc18, q37b, q37c) bake the sf0.01 scratch paths at registration, so
+    they are re-rendered to read the files Spark wrote for ``sf_dir``."""
+    from spark_ml_optimization_spark.operators import curation, setops
+
+    rerender = {
+        "qc13_zorder_file_stats": curation.qc13_oracle_for,
+        "qc18_small_file_compaction": curation.qc18_oracle_for,
+        "q37b_merge_delete_compact": setops.q37b_oracle_for,
+        "q37c_time_travel": setops.q37c_oracle_for,
+    }
+    return rerender[name](sf_dir) if name in rerender else q.oracle
+
+
+#: Queries that mutate shared session state while CONSTRUCTING their
+#: result (streaming drains set session confs, MLlib fits, scratch-dir
+#: writers): the threaded fastlanes run them serially.
+_EAGER_PREFIXES = ("st", "src", "ml", "qc13", "qc18")
+
+
+def split_eager(names):
+    """``(serial, threaded)``: the fastlanes run the eager-construction
+    queries in ``names`` one by one first, then the pure-plan rest on a
+    thread pool."""
+    serial = [n for n in names if n.startswith(_EAGER_PREFIXES)]
+    serial += [
+        n for n in names if n in ("q37b_merge_delete_compact", "q37c_time_travel")
+    ]
+    threaded = [n for n in names if n not in set(serial)]
+    return serial, threaded

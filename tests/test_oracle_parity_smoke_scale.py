@@ -16,7 +16,7 @@ from spark_ml_optimization_spark import registry
 from spark_ml_optimization_spark.sources import TABLES
 
 from .conftest import SF_SMOKE
-from .harness import run_and_compare
+from .harness import oracle_for, run_and_compare
 
 _QUERIES = registry.all_queries()
 _SQL_NAMES = sorted(n for n, q in _QUERIES.items() if q.oracle is not None)
@@ -36,18 +36,5 @@ def duck_smoke():
 @pytest.mark.parametrize("name", _SQL_NAMES)
 def test_sql_oracle_parity_sf0001(spark, duck_smoke, name):
     q = _QUERIES[name]
-    oracle = q.oracle
-    # Layout-audit oracles bake the driver-scale (sf0.01) scratch paths;
-    # re-render them against THIS scale's scratch dirs so the audit
-    # reads the files Spark wrote for sf0.001.
-    from spark_ml_optimization_spark.operators import curation, setops
-
-    rerender = {
-        "qc13_zorder_file_stats": curation.qc13_oracle_for,
-        "qc18_small_file_compaction": curation.qc18_oracle_for,
-        "q37b_merge_delete_compact": setops.q37b_oracle_for,
-        "q37c_time_travel": setops.q37c_oracle_for,
-    }
-    if name in rerender:
-        oracle = rerender[name](SF_SMOKE)
+    oracle = oracle_for(name, q, SF_SMOKE)
     run_and_compare(spark, duck_smoke, q.fn, oracle, name, SF_SMOKE)

@@ -26,21 +26,7 @@ from spark_ml_optimization_spark import registry
 from spark_ml_optimization_spark.sources import TABLES
 
 from .conftest import SF_SMOKE, fastlane_workers
-from .harness import compare
-
-
-def _oracle_sql_for(name: str, q) -> str:
-    # Layout-audit oracles bake the sf0.01 scratch paths; re-render
-    # against sf0.001 (same map as the smoke-scale twin).
-    from spark_ml_optimization_spark.operators import curation, setops
-
-    rerender = {
-        "qc13_zorder_file_stats": curation.qc13_oracle_for,
-        "qc18_small_file_compaction": curation.qc18_oracle_for,
-        "q37b_merge_delete_compact": setops.q37b_oracle_for,
-        "q37c_time_travel": setops.q37c_oracle_for,
-    }
-    return rerender[name](SF_SMOKE) if name in rerender else q.oracle
+from .harness import compare, oracle_for, split_eager
 
 
 def test_all_sql_oracles_sf0001_threaded(spark):
@@ -54,17 +40,7 @@ def test_all_sql_oracles_sf0001_threaded(spark):
             f"read_parquet('{SF_SMOKE}/{t}.parquet')"
         )
 
-    # Eager-construction queries (streaming drains, MLlib fits, scratch
-    # writers) mutate shared session state (shuffle-partition conf,
-    # scratch dirs) — run them serially first, the rest threaded.
-    eager_prefixes = ("st", "src", "ml", "qc13", "qc18")
-    serial = [n for n in names if n.startswith(eager_prefixes)]
-    serial += [
-        n
-        for n in names
-        if n in ("q37b_merge_delete_compact", "q37c_time_travel")
-    ]
-    threaded = [n for n in names if n not in set(serial)]
+    serial, threaded = split_eager(names)
 
     failures: list[str] = []
 
@@ -72,7 +48,7 @@ def test_all_sql_oracles_sf0001_threaded(spark):
         try:
             spdf = queries[name].fn(spark, SF_SMOKE).toPandas()
             opdf = con.cursor().execute(
-                _oracle_sql_for(name, queries[name])
+                oracle_for(name, queries[name], SF_SMOKE)
             ).df()
             compare(spdf, opdf, name)
         except Exception as e:  # noqa: BLE001 — collected, re-raised below

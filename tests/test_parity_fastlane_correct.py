@@ -25,21 +25,7 @@ from spark_ml_optimization_spark import registry
 from spark_ml_optimization_spark.sources import TABLES
 
 from .conftest import SF_CORRECT, SF_SMOKE, fastlane_workers
-from .harness import assert_driver_hashable_schema, compare
-
-#: Queries that mutate shared session state while CONSTRUCTING their
-#: result (streaming drains set session confs, MLlib fits, scratch-dir
-#: writers) — run serially; the pure-plan rest fan out on threads.
-_EAGER_PREFIXES = ("st", "src", "ml", "qc13", "qc18")
-
-
-def _split(names):
-    serial = [n for n in names if n.startswith(_EAGER_PREFIXES)]
-    serial += [
-        n for n in names if n in ("q37b_merge_delete_compact", "q37c_time_travel")
-    ]
-    threaded = [n for n in names if n not in set(serial)]
-    return serial, threaded
+from .harness import assert_driver_hashable_schema, compare, split_eager
 
 
 def test_all_sql_oracles_sf001_threaded(spark):
@@ -53,7 +39,7 @@ def test_all_sql_oracles_sf001_threaded(spark):
             f"read_parquet('{SF_CORRECT}/{t}.parquet')"
         )
 
-    serial, threaded = _split(names)
+    serial, threaded = split_eager(names)
     failures: list[str] = []
 
     def check(name: str) -> None:

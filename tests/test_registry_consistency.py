@@ -169,10 +169,9 @@ def test_session_conf_changes_only_through_session_module():
 
 def test_scratch_locations_only_through_scratch_module():
     """Package code picks a temp location only via scratch.py, which
-    puts every engine-written file under one per-process root removed
-    at exit.  session.py keeps the package zip in the shared temp dir:
-    it is content-addressed and reused across processes.  Hand-made
-    temp dirs elsewhere had no owner to remove them."""
+    puts every engine-written file, the package zip included, under one
+    per-process root removed at exit.  Hand-made temp dirs elsewhere
+    had no owner to remove them."""
     import pathlib
 
     pkg = pathlib.Path(__file__).resolve().parent.parent / (
@@ -181,7 +180,7 @@ def test_scratch_locations_only_through_scratch_module():
     offenders = [
         str(p)
         for p in pkg.rglob("*.py")
-        if p.name not in ("scratch.py", "session.py")
+        if p.name != "scratch.py"
         and ("gettempdir(" in p.read_text() or "mkdtemp(" in p.read_text())
     ]
     assert not offenders, offenders
@@ -201,5 +200,24 @@ def test_registry_entries_written_only_by_register():
         str(p)
         for p in pkg.rglob("*.py")
         if p.name != "registry.py" and assign.search(p.read_text())
+    ]
+    assert not offenders, offenders
+
+
+def test_memo_keys_only_in_session_module():
+    """Only ``session.memo`` keys a value on ``applicationId``: every
+    artifact reused across queries goes through that one memo, so each
+    reuse is recorded in ``session.MEMO_EVENTS``.  Hand-rolled memos
+    each had their own key policy (one keyed on ``sf_dir`` alone, one on
+    ``id()``) and went unaudited."""
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / (
+        "spark_ml_optimization_spark"
+    )
+    offenders = [
+        str(p)
+        for p in pkg.rglob("*.py")
+        if p.name != "session.py" and "applicationId" in p.read_text()
     ]
     assert not offenders, offenders

@@ -178,7 +178,24 @@ def test_avro_roundtrip_when_connector_present(spark):
     assert df.count() > 0
 
 
-def test_winnowing_guarantee_detects_planted_run(spark):
+def test_avro_probe_ignores_jars_off_the_classpath(tmp_path, monkeypatch):
+    """Only pyspark's own jars/ dir is on the local JVM's classpath, so a
+    spark-avro jar anywhere else must not register src16, which could
+    not then find the avro source."""
+    import pytest
+
+    from spark_ml_optimization_spark.operators.io_ops import (
+        avro_connector_available,
+    )
+
+    if avro_connector_available():
+        pytest.skip("pyspark ships the spark-avro connector jar")
+    (tmp_path / "spark-avro_2.13-x.jar").write_bytes(b"")
+    monkeypatch.setenv("SPARK_GRAFT_AVRO_JARS", str(tmp_path))
+    assert not avro_connector_available()
+
+
+def test_winnowing_guarantee_detects_planted_run(spark, tmp_path):
     """Schleimer et al.'s local guarantee: any shared run of at least
     k + w - 1 = 8 consecutive words MUST surface as >= 1 shared
     fingerprint.  Two otherwise-disjoint docs share a planted 10-word
@@ -197,11 +214,8 @@ def test_winnowing_guarantee_detects_planted_run(spark):
         [(1, f"{filler_a} {run}"), (2, f"{run} {filler_b}")],
         ["doc_id", "text"],
     )
-    import tempfile
-
-    path = tempfile.mkdtemp(prefix="winnow_micro_") 
-    docs.write.mode("overwrite").parquet(f"{path}/documents.parquet")
-    out = text_ops.q79b_winnowing(spark, path).collect()
+    docs.write.mode("overwrite").parquet(f"{tmp_path}/documents.parquet")
+    out = text_ops.q79b_winnowing(spark, str(tmp_path)).collect()
     pairs = {(r["doc_a"], r["doc_b"]) for r in out}
     assert (1, 2) in pairs, out
 
