@@ -567,14 +567,13 @@ def ml13_cv_parallelism_speedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.ml.evaluation import MulticlassClassificationEvaluator
     from pyspark.ml.tuning import CrossValidator, ParamGridBuilder
 
-    data = _labeled_embeddings(spark, sf_dir).cache()
-    data.count()  # materialize once so both runs see identical input state
     # maxIter=5 keeps each LBFGS fit long enough for the parallelism
     # A/B to show a real speedup while shaving the suite's single
     # biggest discretionary cost (8 fits total: 2 cells × 2 folds × 2
     # parallelism settings).
     lr = LogisticRegression(maxIter=5, family="multinomial")
     ev = MulticlassClassificationEvaluator(metricName="accuracy")
+    data = _labeled_embeddings(spark, sf_dir).cache()
 
     def fit_with(par: int, cells: list) -> float:
         grid = ParamGridBuilder().addGrid(lr.regParam, cells).build()
@@ -586,15 +585,18 @@ def ml13_cv_parallelism_speedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         _fit_retry(cv, data)
         return time.perf_counter() - t0
 
-    # Serial arm: 1 grid cell (2 fits), linearly extrapolated to the full
-    # 2-cell grid — serial fits are independent and identically sized, so
-    # wall time is additive and the speedup ratio survives the halving
-    # (A/B-verified when this trim landed).  Parallel arm runs the full
-    # grid: its 4 fits are ONE wave at parallelism=4, so it cannot be
-    # shrunk without changing what it measures.
-    serial = fit_with(1, [0.005]) * 2
-    parallel = fit_with(4, [0.005, 0.5])
-    data.unpersist()
+    try:
+        data.count()  # materialize once so both runs see identical input state
+        # Serial arm: 1 grid cell (2 fits), linearly extrapolated to the
+        # full 2-cell grid — serial fits are independent and identically
+        # sized, so wall time is additive and the speedup ratio survives
+        # the halving (A/B-verified when this trim landed).  Parallel arm
+        # runs the full grid: its 4 fits are ONE wave at parallelism=4,
+        # so it cannot be shrunk without changing what it measures.
+        serial = fit_with(1, [0.005]) * 2
+        parallel = fit_with(4, [0.005, 0.5])
+    finally:
+        data.unpersist()
     rows = [(round(serial, 2), round(parallel, 2), round(serial / parallel, 2))]
     return spark.createDataFrame(
         rows, schema="serial_sec double, parallel_sec double, speedup double"
@@ -789,29 +791,32 @@ def ml17_one_vs_rest(spark: SparkSession, sf_dir: str) -> DataFrame:
     # A/Bs retained: maxIter 5 (3 costs accuracy 0.2135->0.2005, 8 buys
     # none back), parallelism 10 (8 leaves a straggler wave).
     data = _labeled_embeddings(spark, sf_dir).repartition(2).cache()
-    data.count()
     ovr = OneVsRest(
         classifier=LinearSVC(maxIter=5, regParam=0.01), parallelism=10
     )
-    model = _fit_retry(ovr, data)
-    # ONE scoring pass (round 11, guide §1/§5): the evaluator and the
-    # per-class count each re-ran the FULL OvR transform (10 per-class
-    # raw-prediction scorings per row) — the confusion aggregate below
-    # yields both from a single job.  accuracy = sum(pred==label)/n is
-    # MulticlassClassificationEvaluator's accuracy definition verbatim
-    # (integer-exact counts, same double division).
-    cm = (
-        model.transform(data)
-        .groupBy(F.col("prediction").cast("int").alias("predicted_class"))
-        .agg(
-            F.count("*").alias("n"),
-            F.sum(
-                (F.col("prediction") == F.col("label")).cast("long")
-            ).alias("n_correct"),
+    try:
+        data.count()
+        model = _fit_retry(ovr, data)
+        # ONE scoring pass (round 11, guide §1/§5): the evaluator and
+        # the per-class count each re-ran the FULL OvR transform (10
+        # per-class raw-prediction scorings per row) — the confusion
+        # aggregate below yields both from a single job.  accuracy =
+        # sum(pred==label)/n is MulticlassClassificationEvaluator's
+        # accuracy definition verbatim (integer-exact counts, same
+        # double division).
+        cm = (
+            model.transform(data)
+            .groupBy(F.col("prediction").cast("int").alias("predicted_class"))
+            .agg(
+                F.count("*").alias("n"),
+                F.sum(
+                    (F.col("prediction") == F.col("label")).cast("long")
+                ).alias("n_correct"),
+            )
+            .collect()
         )
-        .collect()
-    )
-    data.unpersist()
+    finally:
+        data.unpersist()
     acc = sum(r["n_correct"] for r in cm) / sum(r["n"] for r in cm)
     rows = sorted((int(r["predicted_class"]), int(r["n"])) for r in cm)
     # <=10-row bounded driver-side materialization (the ml42/ml43

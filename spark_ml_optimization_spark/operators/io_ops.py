@@ -251,12 +251,7 @@ def src10_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     "the SQL oracle; the migration on-ramp for pandas codebases.",
 )
 def src05_pandas_on_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pyspark.pandas as ps
-
-    from ..session import configure
-
-    configure(spark)
-    psdf = ps.read_parquet(os.path.join(sf_dir, "documents.parquet"))
+    psdf = load_table(spark, sf_dir, "documents").pandas_api()
     out = (
         psdf.groupby("lang")
         .agg(n_docs=("doc_id", "count"), total_chars=("n_chars", "sum"))

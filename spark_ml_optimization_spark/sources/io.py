@@ -1,10 +1,11 @@
 """Parquet sources: table loading + temp-view registration.
 
 The data model (FIXTURES.md) is ten parquet relations per scale-factor
-directory.  ``load_table`` is the single scan entry point — schema-on-read
-from parquet footers, no inference — so Catalyst's parquet pushdown
-(filters, column pruning, row-group skipping) applies to every operator
-built on top.
+directory.  ``load_raw`` is the single scan entry point — schema-on-read
+from parquet footers, each footer inferred once per process — and
+``load_table`` adds the events ts normalization every query reads, so
+Catalyst's parquet pushdown (filters, column pruning, row-group
+skipping) applies to every operator built on top.
 
 100 TB posture: at cluster scale these would be date/key-partitioned
 parquet datasets (or Iceberg/Delta tables); ``load_table`` would point at a
@@ -75,33 +76,31 @@ def normalize_events_ts(df: DataFrame) -> DataFrame:
     return df
 
 
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Scan one relation.  Lazy: nothing executes until an action
+def load_raw(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Scan one relation exactly as its parquet footer declares it (no
+    :func:`normalize_events_ts`).  Lazy: nothing executes until an action
     (first-ever read of a path infers its schema once; later reads hit
-    the schema cache and launch zero jobs).
-
-    ``events.ts`` precision handling lives in :func:`normalize_events_ts`.
-    """
+    the schema cache and launch zero jobs).  Queries read
+    :func:`load_table`; this raw form is for code that must match the
+    file's own format — a stream source's schema, rows planted into that
+    stream, part of the fixture written back as a stream input."""
     configure(spark)
     path = table_path(sf_dir, name)
     cached = _SCHEMA_CACHE.get(path)
     if cached is not None:
-        df = spark.read.schema(cached).parquet(path)
-    else:
-        df = spark.read.parquet(path)
-        _SCHEMA_CACHE[path] = df.schema
-    if name == "events":
-        df = normalize_events_ts(df)
+        return spark.read.schema(cached).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMA_CACHE[path] = df.schema
     return df
 
 
-def raw_schema(spark: SparkSession, sf_dir: str, name: str) -> StructType:
-    """One relation's schema as its parquet footer declares it (before
-    :func:`normalize_events_ts`), from :func:`load_table`'s cache."""
-    path = table_path(sf_dir, name)
-    if path not in _SCHEMA_CACHE:
-        load_table(spark, sf_dir, name)
-    return _SCHEMA_CACHE[path]
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Scan one relation: :func:`load_raw` plus, for ``events``, the ts
+    precision handling of :func:`normalize_events_ts`."""
+    df = load_raw(spark, sf_dir, name)
+    if name == "events":
+        df = normalize_events_ts(df)
+    return df
 
 
 def spread(df: DataFrame, target: int | None = None) -> DataFrame:

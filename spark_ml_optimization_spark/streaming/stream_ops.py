@@ -7,6 +7,19 @@ materialized result as a DataFrame.  The transformations are the same
 groupBy(window(...)) / dropDuplicates code paths as operators/events.py —
 that equivalence is the point: one declarative plan, two execution modes.
 
+One mechanism each:
+- :func:`_events_stream` is the one events-stream reader: the fixture's
+  raw footer schema from ``sources.io.load_raw``, ts normalized to
+  TIMESTAMP, over the shared stage or a query's own source dir;
+- :func:`_stage_once` writes an input dir (the events stage, st14's
+  incoming docs, st27's probes) once per process and ``sf_dir``;
+- :func:`_drain` is the one drive loop: start, drain, plant driver
+  batches, stop.  :func:`_run_to_memory` wraps it for memory-sink twins,
+  foreachBatch twins call it directly; only st18's availableNow query
+  ends by itself.
+Batch reads of a fixture go through ``sources.io`` (``load_table``, or
+``load_raw`` where the raw footer format is needed).
+
 All twins are hash-verified against deterministic batch oracles
 (st01-st14, st16-st19 — a single staged file drains in one
 micro-batch, making even update/append-mode output batch-equivalent;
@@ -26,64 +39,102 @@ from __future__ import annotations
 import os
 import shutil
 import uuid
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming import DataStreamWriter
 
 from .. import scratch
 from ..registry import register
 from ..session import configure, scoped_conf
-from ..sources.io import normalize_events_ts, raw_schema
-
-_STAGE_CACHE: dict[str, str] = {}
+from ..sources.io import load_raw, load_table, normalize_events_ts, table_path
 
 #: Shuffle/state-store partitions for the streaming demos (see
 #: _run_to_memory's sizing note).
 _STREAM_PARTS = "4"
 
 
+def _stage_once(name: str, sf_dir: str, write: Callable[[str], None]) -> str:
+    """``scratch.path(name, sf_dir)``, written by ``write(dir)`` on the
+    first call in this process.
+
+    ``write`` fills a fresh sibling dir, which is then renamed onto the
+    stage path, so an existing path always holds a complete stage.  A
+    write that raises leaves no stage behind (the next call writes
+    again); a thread that loses the rename race to a concurrent
+    stager removes its own copy and reads the winner's."""
+    dst = scratch.path(name, sf_dir)
+    if os.path.exists(dst):
+        return dst
+    tmp = scratch.fresh(f"{name}_")
+    try:
+        write(tmp)
+        os.rename(tmp, dst)
+    except OSError:
+        if not os.path.exists(dst):  # not a lost rename race
+            raise
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)  # gone after a rename
+    return dst
+
+
 def _stage_events(sf_dir: str, dst_dir: str) -> None:
     """File stream sources require a *directory*: stage the events
     fixture into ``dst_dir`` (hardlink — same bytes, no copy cost; a
     copy only where linking fails, e.g. across file systems)."""
-    src = os.path.join(sf_dir, "events.parquet")
-    dst = os.path.join(dst_dir, "events.parquet")
+    src = table_path(sf_dir, "events")
+    dst = os.path.join(dst_dir, os.path.basename(src))
     try:
         os.link(src, dst)
     except OSError:
         shutil.copyfile(src, dst)
 
 
-def _read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    configure(spark)
-    # Streaming sources never infer: read the file exactly as written,
-    # with the batch reader's raw footer schema; ts normalization
-    # happens after.
-    schema = raw_schema(spark, sf_dir, "events")
-    if sf_dir not in _STAGE_CACHE:
-        stage = scratch.path("events_stream", sf_dir)
-        os.makedirs(stage, exist_ok=True)
-        _stage_events(sf_dir, stage)
-        _STAGE_CACHE[sf_dir] = stage
-    raw = spark.readStream.schema(schema).parquet(_STAGE_CACHE[sf_dir])
-    # Watermarks demand TIMESTAMP (EVENT_TIME_IS_NOT_ON_TIMESTAMP_TYPE on
-    # ntz); session TZ is pinned UTC so the instant matches the batch
-    # twins' timestamp_ntz values exactly.
-    return normalize_events_ts(raw).withColumn("ts", F.col("ts").cast("timestamp"))
+def _events_stream(
+    spark: SparkSession, sf_dir: str, path: str | None = None
+) -> DataFrame:
+    """The events fixture as a stream over every file under ``path``
+    (default: the shared stage, written once per ``sf_dir``; a query
+    that adds driver batches or splits passes its own dir).
 
-
-def _events_stream(spark: SparkSession, schema: T.StructType, path: str) -> DataFrame:
-    """Events stream over every file under ``path`` (the staged fixture
-    plus any driver-batch sub-directories), raw footer ``schema``, ts
-    normalized to TIMESTAMP as in :func:`_read_events_stream`."""
+    Streaming sources never infer: every file is read with the
+    fixture's raw footer schema, then ts is normalized as the batch
+    reader does and cast to TIMESTAMP — watermarks demand it
+    (EVENT_TIME_IS_NOT_ON_TIMESTAMP_TYPE on ntz), and the session TZ is
+    pinned UTC so the instant matches the batch twins' timestamp_ntz
+    values exactly."""
+    schema = load_raw(spark, sf_dir, "events").schema
+    if path is None:
+        path = _stage_once(
+            "events_stream", sf_dir, lambda d: _stage_events(sf_dir, d)
+        )
     raw = (
         spark.readStream.schema(schema)
         .option("recursiveFileLookup", "true")
         .parquet(path)
     )
     return normalize_events_ts(raw).withColumn("ts", F.col("ts").cast("timestamp"))
+
+
+def _drain(
+    writer: DataStreamWriter,
+    driver_batches: Sequence[tuple[DataFrame, str]] = (),
+) -> None:
+    """Start ``writer``'s query, process everything its source holds,
+    then write each driver batch ``(frame, path)`` — ``frame`` with
+    ``repartition(1)`` into ``path``, a new sub-directory of the
+    source dir — and drain again, so each pair is exactly one more data
+    micro-batch.  The query is stopped however the block ends."""
+    q = writer.start()
+    try:
+        q.processAllAvailable()
+        for frame, path in driver_batches:
+            frame.repartition(1).write.parquet(path)
+            q.processAllAvailable()
+    finally:
+        q.stop()
 
 
 _NO_DATA_KEY = "spark.sql.streaming.noDataMicroBatches.enabled"
@@ -98,8 +149,8 @@ def _run_to_memory(
     query_name: str | None = None,
     checkpoint: str | None = None,
 ) -> DataFrame:
-    """Drive a streaming query over the static fixture to completion and
-    return the memory-sink table.
+    """Drive a streaming query over the static fixture to completion
+    (:func:`_drain`) and return the memory-sink table.
 
     Stateful operators allocate one state store per shuffle partition and
     AQE never coalesces streaming plans, so partition count is a per-
@@ -111,13 +162,9 @@ def _run_to_memory(
     sizes this to state-bytes-per-partition and must keep it FIXED
     across restarts of the same checkpoint.
 
-    driver_batches: ``(frame, path)`` pairs, run in order after the
-    first drain.  Each frame is written to ``path`` — a new
-    sub-directory of the stream's source dir — with ``repartition(1)``,
-    then the query drains again, so every pair is exactly one more data
-    micro-batch.  Their purpose is to move the watermark
-    deterministically: batch N applies batch N−1's watermark, so a
-    frame's timestamps take effect one batch AFTER it lands (st09's
+    driver_batches: see :func:`_drain`.  Their purpose is to move the
+    watermark deterministically: batch N applies batch N−1's watermark,
+    so a frame's timestamps take effect one batch AFTER it lands (st09's
     second sentinel batch is what emits the rows the first one made
     evictable).  An empty fixture passes none: there is nothing to
     evict, finalize or drop.
@@ -146,14 +193,7 @@ def _run_to_memory(
         writer = df.writeStream.outputMode(output_mode).format("memory").queryName(name)
         if checkpoint is not None:
             writer = writer.option("checkpointLocation", checkpoint)
-        q = writer.start()
-        try:
-            q.processAllAvailable()
-            for frame, path in driver_batches:
-                frame.repartition(1).write.parquet(path)
-                q.processAllAvailable()
-        finally:
-            q.stop()
+        _drain(writer, driver_batches)
     # Memory-sink tables are session-scoped (they outlive the stopped
     # query), so the table reference is stable as-is — no extra
     # snapshot/view indirection needed.
@@ -247,7 +287,7 @@ def _sentinel_batches(
     "batch oracle.",
 )
 def st01_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = _read_events_stream(spark, sf_dir)
+    events = _events_stream(spark, sf_dir)
     agg = (
         events.groupBy(F.window("ts", "1 day").alias("w"), "event_type")
         .agg(F.count("*").alias("n_events"))
@@ -293,7 +333,7 @@ def st01_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     "hash-verified against the shifted-time_bucket batch oracle.",
 )
 def st02_stream_watermark_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = _read_events_stream(spark, sf_dir)
+    events = _events_stream(spark, sf_dir)
     agg = (
         events.withWatermark("ts", "10 minutes")
         .groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"), "event_type")
@@ -345,7 +385,7 @@ def st02_stream_watermark_sliding(spark: SparkSession, sf_dir: str) -> DataFrame
     "the gap-island oracle.",
 )
 def st03_stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = _read_events_stream(spark, sf_dir)
+    events = _events_stream(spark, sf_dir)
     agg = (
         events.withWatermark("ts", "10 minutes")
         .groupBy(F.session_window("ts", "30 minutes").alias("sw"), "user_id")
@@ -383,7 +423,7 @@ def st03_stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     "hash-verified against the DISTINCT key-set oracle.",
 )
 def st04_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = _read_events_stream(spark, sf_dir)
+    events = _events_stream(spark, sf_dir)
     deduped = (
         events.withWatermark("ts", "10 minutes")
         .dropDuplicatesWithinWatermark(["user_id", "event_type"])
@@ -409,8 +449,6 @@ def st04_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     "Streaming; at scale it's a broadcast dim.",
 )
 def st07_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..sources import load_table
-
     # materialize the static side once — streaming re-evaluates static
     # plans per micro-batch otherwise
     static_profile = (
@@ -419,7 +457,7 @@ def st07_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("hist_events"))
         .localCheckpoint(eager=True)
     )
-    stream = _read_events_stream(spark, sf_dir)
+    stream = _events_stream(spark, sf_dir)
     joined = (
         stream.join(static_profile, "user_id")
         .select("event_id", "user_id", "event_type", "hist_events")
@@ -457,7 +495,7 @@ def st07_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     "watermark + range (the canonical funnel/attribution join).",
 )
 def st08_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = _read_events_stream(spark, sf_dir)
+    events = _events_stream(spark, sf_dir)
     purchases = (
         events.filter(F.col("event_type") == "purchase")
         .select(
@@ -511,7 +549,7 @@ def st08_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 def st06_stateful_apply_in_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    events = _read_events_stream(spark, sf_dir)
+    events = _events_stream(spark, sf_dir)
 
     def running_totals(key, pdfs, state: GroupState):
         (user_id,) = key
@@ -555,7 +593,7 @@ def st06_stateful_apply_in_pandas(spark: SparkSession, sf_dir: str) -> DataFrame
     "production sink shape (vs the test-only memory sink).",
 )
 def st05_stream_foreach_batch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = _read_events_stream(spark, sf_dir)
+    events = _events_stream(spark, sf_dir)
     out_dir = scratch.fresh("st05_")
     enriched = events.select(
         "event_id", "user_id", "event_type", F.get_json_object("props", "$.k").cast("int").alias("k")
@@ -564,11 +602,7 @@ def st05_stream_foreach_batch_sink(spark: SparkSession, sf_dir: str) -> DataFram
     def write_epoch(batch_df: DataFrame, epoch_id: int) -> None:
         batch_df.write.mode("append").parquet(out_dir)
 
-    q = enriched.writeStream.foreachBatch(write_epoch).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    _drain(enriched.writeStream.foreachBatch(write_epoch))
     return spark.read.parquet(out_dir)
 
 
@@ -590,7 +624,7 @@ def st05_stream_foreach_batch_sink(spark: SparkSession, sf_dir: str) -> DataFram
     # NULL rows surface only when a LATER batch runs with an advanced
     # watermark, so the construction plants that advance explicitly.
     # The fixture streams from a PRIVATE staged dir (the shared
-    # _stage_dir must stay pristine for the other twins); after the
+    # events stage must stay pristine for the other twins); after the
     # main file drains, two sequenced driver files — each one matched
     # purchase+click pair at sentinel user_id -1/-2, max(ts)+2h and
     # +4h — advance BOTH sides' watermarks (the query watermark is the
@@ -626,11 +660,10 @@ def _watermarked_outer_stream_join(
     emission forced deterministically by two sequenced watermark-driver
     batches (matched sentinel pairs at user -1/-2, max(ts)+2h/+4h).
     ``how`` is 'left_outer' (st09) or 'full_outer' (st21)."""
-    configure(spark)
-    raw = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+    raw = load_raw(spark, sf_dir, "events")
     with scratch.scoped("st09_") as base:
         _stage_events(sf_dir, base)
-        stream = _events_stream(spark, raw.schema, base)
+        stream = _events_stream(spark, sf_dir, base)
         purchases = (
             stream.filter(F.col("event_type") == "purchase")
             .select(
@@ -716,7 +749,7 @@ def _watermarked_outer_stream_join(
     "which tests pin to the batch groupBy ground truth.",
 )
 def st10_stream_upsert_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = _read_events_stream(spark, sf_dir)
+    events = _events_stream(spark, sf_dir)
     serve_dir = os.path.join(scratch.fresh("st10_"), "serve")
     per_user = events.select("user_id", "ts")
 
@@ -740,11 +773,7 @@ def st10_stream_upsert_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.rmtree(serve_dir, ignore_errors=True)
         os.rename(staged, serve_dir)
 
-    q = per_user.writeStream.foreachBatch(merge_epoch).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    _drain(per_user.writeStream.foreachBatch(merge_epoch))
     return spark.read.parquet(serve_dir).select(
         "user_id",
         "n_events",
@@ -760,6 +789,27 @@ def _promote(split_dir: str, dst: str) -> None:
         os.rename(split_dir, dst)
     else:
         os.makedirs(dst)
+
+
+def _parity_split(
+    spark: SparkSession, sf_dir: str, base: str
+) -> tuple[T.StructType, str, str]:
+    """The restart twins' input (st11, st30): the events fixture's
+    ``(event_id, event_type)`` split by event_id parity in ONE
+    dynamic-partition write (round 11, guide §6: two filtered writes
+    re-scanned the fixture twice).  The even half is promoted to
+    ``base/src/part1``, the run-1 source; returns the split's schema,
+    that source dir and the odd half's staging dir, which the caller
+    promotes to ``src/part2`` before the restart."""
+    src_dir = os.path.join(base, "src")
+    os.makedirs(src_dir)
+    batch = load_table(spark, sf_dir, "events").select("event_id", "event_type")
+    split_root = os.path.join(base, "split")
+    batch.withColumn("m", F.col("event_id") % 2).repartition(1).write.partitionBy(
+        "m"
+    ).parquet(split_root)
+    _promote(os.path.join(split_root, "m=0"), os.path.join(src_dir, "part1"))
+    return batch.schema, src_dir, os.path.join(split_root, "m=1")
 
 
 @register(
@@ -786,46 +836,22 @@ def _promote(split_dir: str, dst: str) -> None:
     "is idempotent per epoch.",
 )
 def st11_checkpoint_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
-    configure(spark)
     base = scratch.fresh("st11_")
-    src_dir = os.path.join(base, "src")
     ckpt_dir = os.path.join(base, "ckpt")
     sink_dir = os.path.join(base, "sink")
-    os.makedirs(src_dir)
-
-    batch = normalize_events_ts(
-        spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-    ).select("event_id", "event_type")
-    # Deterministic 2-way split written in ONE pass (round 11, guide
-    # §6: the two filtered writes re-scanned the fixture twice); the
-    # dynamic-partition write emits one file tree per parity, m=0 is
-    # renamed in as phase-1's only visible tree and m=1 staged for the
-    # phase-2 restart.
-    split_root = os.path.join(base, "split")
-    batch.withColumn("m", F.col("event_id") % 2).repartition(1).write.partitionBy(
-        "m"
-    ).parquet(split_root)
-    _promote(os.path.join(split_root, "m=0"), os.path.join(src_dir, "part1"))
-    part2_staging = os.path.join(split_root, "m=1")
-
-    schema = batch.schema
+    schema, src_dir, part2_staging = _parity_split(spark, sf_dir, base)
 
     def append_epoch(batch_df: DataFrame, epoch_id: int) -> None:
         batch_df.write.mode("append").parquet(sink_dir)
 
     def run_once() -> None:
-        q = (
+        _drain(
             spark.readStream.schema(schema)
             .option("recursiveFileLookup", "true")
             .parquet(src_dir)
             .writeStream.foreachBatch(append_epoch)
             .option("checkpointLocation", ckpt_dir)
-            .start()
         )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
 
     run_once()  # phase 1: file 1 only
     _promote(part2_staging, os.path.join(src_dir, "part2"))
@@ -905,15 +931,12 @@ def st11_checkpoint_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
     "binning pass over the batch.",
 )
 def st12_stream_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
-    configure(spark)
     base = scratch.fresh("st12_")
     src_dir = os.path.join(base, "src")
     sink_dir = os.path.join(base, "sink")
     os.makedirs(src_dir)
 
-    ev = normalize_events_ts(
-        spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-    ).select("event_id", "value")
+    ev = load_table(spark, sf_dir, "events").select("event_id", "value")
     ref = ev.filter(F.col("event_id") % 3 == 0)
     ev.filter(F.col("event_id") % 3 == 1).write.parquet(os.path.join(src_dir, "b1"))
     ev.filter(F.col("event_id") % 3 == 2).write.parquet(os.path.join(src_dir, "b2"))
@@ -972,19 +995,13 @@ def st12_stream_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         out.write.mode("append").parquet(sink_dir)
 
-    schema = ev.schema
-    q = (
-        spark.readStream.schema(schema)
+    _drain(
+        spark.readStream.schema(ev.schema)
         .option("maxFilesPerTrigger", "1")
         .option("recursiveFileLookup", "true")
         .parquet(src_dir)
         .writeStream.foreachBatch(monitor_batch)
-        .start()
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     back = spark.read.parquet(sink_dir)
     nb = back.agg(F.count("*").alias("n_batches"))
     return back.crossJoin(F.broadcast(nb)).select(
@@ -1033,7 +1050,7 @@ def st12_stream_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
 def st13_stream_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
-    events = _read_events_stream(spark, sf_dir)
+    events = _events_stream(spark, sf_dir)
     base = scratch.fresh("st13_")
     state = {"version": -1}
 
@@ -1082,40 +1099,8 @@ def st13_stream_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         merged.write.mode("overwrite").parquet(f"{base}/v{state['version'] + 1}")
         state["version"] += 1
 
-    q = events.writeStream.foreachBatch(merge_epoch).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    _drain(events.writeStream.foreachBatch(merge_epoch))
     return spark.read.parquet(f"{base}/v{state['version']}")
-
-
-_INGEST_STAGE_CACHE: dict[str, str] = {}
-
-
-def _stage_incoming_docs(spark: SparkSession, sf_dir: str) -> str:
-    """Stage the deterministic 'incoming batch' for st14: every document
-    re-submitted under doc_id+1e6, with every 10th UPPERCASED (a changed
-    digest — genuinely new content); the rest are exact re-crawls of the
-    corpus.  Written once per sf_dir."""
-    if sf_dir not in _INGEST_STAGE_CACHE:
-        from ..sources import load_table
-
-        dst = scratch.path("incoming_docs", sf_dir)
-        (
-            load_table(spark, sf_dir, "documents")
-            .select(
-                (F.col("doc_id") + 1000000).alias("doc_id"),
-                F.when(F.col("doc_id") % 10 == 0, F.upper("text"))
-                .otherwise(F.col("text"))
-                .alias("text"),
-            )
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(dst)
-        )
-        _INGEST_STAGE_CACHE[sf_dir] = dst
-    return _INGEST_STAGE_CACHE[sf_dir]
 
 
 @register(
@@ -1150,13 +1135,22 @@ def _stage_incoming_docs(spark: SparkSession, sf_dir: str) -> str:
     "side needs no watermark bookkeeping.",
 )
 def st14_stream_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..sources import load_table
-
-    configure(spark)
-    staged = _stage_incoming_docs(spark, sf_dir)
-    schema = spark.read.parquet(staged).schema
+    # The deterministic 'incoming batch': every document re-submitted
+    # under doc_id+1e6, with every 10th UPPERCASED (a changed digest —
+    # genuinely new content); the rest are exact re-crawls of the corpus.
+    batch = load_table(spark, sf_dir, "documents").select(
+        (F.col("doc_id") + 1000000).alias("doc_id"),
+        F.when(F.col("doc_id") % 10 == 0, F.upper("text"))
+        .otherwise(F.col("text"))
+        .alias("text"),
+    )
+    staged = _stage_once(
+        "incoming_docs",
+        sf_dir,
+        lambda d: batch.coalesce(1).write.mode("overwrite").parquet(d),
+    )
     incoming = (
-        spark.readStream.schema(schema)
+        spark.readStream.schema(batch.schema)
         .parquet(staged)
         .withColumn("text_md5", F.md5("text"))
     )
@@ -1237,7 +1231,7 @@ if transform_with_state_available():
             def close(self):
                 pass
 
-        events = _read_events_stream(spark, sf_dir)
+        events = _events_stream(spark, sf_dir)
         out = (
             events.select("user_id", "value")
             .groupBy("user_id")
@@ -1274,7 +1268,7 @@ if transform_with_state_available():
     "swaps in an approx_top_k sketch per trigger (q28b's operator).",
 )
 def st16_stream_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = _read_events_stream(spark, sf_dir)
+    events = _events_stream(spark, sf_dir)
     top = (
         events.groupBy("user_id")
         .agg(F.count("*").cast("long").alias("n_events"))
@@ -1349,7 +1343,7 @@ def src18_python_stream_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     "rate x lag, not by history.",
 )
 def st17_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = _read_events_stream(spark, sf_dir)
+    events = _events_stream(spark, sf_dir)
     deduped = (
         events.withWatermark("ts", "30 minutes")
         .dropDuplicatesWithinWatermark(["user_id", "event_type"])
@@ -1388,16 +1382,13 @@ def st17_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     "epoch with source-log exactly-once across the whole drain.",
 )
 def st18_available_now_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
-    configure(spark)
     base = scratch.fresh("st18_")
     src_dir = os.path.join(base, "src")
     ckpt_dir = os.path.join(base, "ckpt")
     sink_dir = os.path.join(base, "sink")
     os.makedirs(src_dir)
 
-    batch = normalize_events_ts(
-        spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-    ).select("event_id", "event_type")
+    batch = load_table(spark, sf_dir, "events").select("event_id", "event_type")
     # Six deterministic single-file splits, written in ONE pass (round
     # 11, guide §6): the per-split filter+write loop re-scanned the
     # fixture six times.  A single-task dynamic-partition write emits
@@ -1479,8 +1470,6 @@ def st18_available_now_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     "the static side broadcasts.",
 )
 def st19_stream_proximity_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..sources import load_table
-
     tol = 300 * 1000000
     base = load_table(spark, sf_dir, "events").select(
         "event_id",
@@ -1497,7 +1486,7 @@ def st19_stream_proximity_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .localCheckpoint(eager=True)
     )
-    stream = _read_events_stream(spark, sf_dir)
+    stream = _events_stream(spark, sf_dir)
     eb = F.expr(f"(err_us - pmod(err_us, {tol})) div {tol}")
     err = (
         stream.filter(F.col("event_type") == "error")
@@ -1558,8 +1547,6 @@ def st19_stream_proximity_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     "loop; state is bounded by the static side's retention window.",
 )
 def st20_stream_rapid_repeat(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..sources import load_table
-
     tol = 300 * 1000000
     base = load_table(spark, sf_dir, "events").select(
         "event_id",
@@ -1577,7 +1564,7 @@ def st20_stream_rapid_repeat(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .localCheckpoint(eager=True)
     )
-    stream = _read_events_stream(spark, sf_dir)
+    stream = _events_stream(spark, sf_dir)
     sb = F.expr(f"(a_us - pmod(a_us, {tol})) div {tol}")
     a = (
         stream.select(
@@ -1686,11 +1673,10 @@ def st21_stream_stream_full_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     "rollup cascade raw -> minutely -> hourly in one plan.",
 )
 def st22_stream_chained_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    configure(spark)
-    raw = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+    raw = load_raw(spark, sf_dir, "events")
     with scratch.scoped("st22_") as base:
         _stage_events(sf_dir, base)
-        stream = _events_stream(spark, raw.schema, base)
+        stream = _events_stream(spark, sf_dir, base)
         lvl1 = (
             stream.withWatermark("ts", "10 minutes")
             .groupBy(F.window("ts", "10 minutes").alias("w10"), "event_type")
@@ -1765,8 +1751,6 @@ def st22_stream_chained_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     "once and broadcasts; state-free join, O(batch) per trigger.",
 )
 def st23_stream_static_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..sources import load_table
-
     vip = (
         load_table(spark, sf_dir, "customer")
         .filter(F.col("c_acctbal") > 9000)
@@ -1776,7 +1760,7 @@ def st23_stream_static_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .localCheckpoint(eager=True)
     )
-    stream = _read_events_stream(spark, sf_dir)
+    stream = _events_stream(spark, sf_dir)
     joined = stream.join(F.broadcast(vip), "user_id", "left").select(
         "event_id", "user_id", "event_type", "vip_cents"
     )
@@ -1810,12 +1794,11 @@ def st23_stream_static_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     "length; the drop is what makes that bound safe to enforce.",
 )
 def st24_stream_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
-    configure(spark)
-    raw = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+    raw = load_raw(spark, sf_dir, "events")
     with scratch.scoped("st24_") as base:
         _stage_events(sf_dir, base)
         agg = (
-            _events_stream(spark, raw.schema, base)
+            _events_stream(spark, sf_dir, base)
             .withWatermark("ts", "10 minutes")
             .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
             .agg(F.count("*").alias("n_events"))
@@ -1919,8 +1902,7 @@ def st26_rocksdb_state_store(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _stateful_restart_recovery(
     spark: SparkSession, sf_dir: str, provider: str | None
 ) -> DataFrame:
-    configure(spark)
-    raw = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+    raw = load_raw(spark, sf_dir, "events")
     name = f"mem_{uuid.uuid4().hex[:12]}"
     with scratch.scoped("st25_") as base:
         src_dir = os.path.join(base, "src")
@@ -1931,7 +1913,7 @@ def _stateful_restart_recovery(
         part2_staging = os.path.join(base, "part2_staging")
         raw.filter(F.col("event_id") % 2 == 1).write.parquet(part2_staging)
         agg = (
-            _events_stream(spark, raw.schema, src_dir)
+            _events_stream(spark, sf_dir, src_dir)
             .groupBy(F.window("ts", "1 day").alias("w"), "event_type")
             .agg(F.count("*").alias("n_events"))
             .select(
@@ -1995,9 +1977,7 @@ def _stateful_restart_recovery(
 )
 def st27_stream_ann_cell_route(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.vector import to_double_array
-    from ..sources import load_table
 
-    configure(spark)
     e = load_table(spark, sf_dir, "embeddings")
     emb = to_double_array("embedding")
     cell = (
@@ -2013,18 +1993,14 @@ def st27_stream_ann_cell_route(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("n_candidates"))
         .localCheckpoint(eager=True)
     )
-    # Stage the incoming slice once per (app, sf): a real feed delivers
-    # files; the stream reads them with the staged footer schema.
-    key = f"st27_{sf_dir}"
-    if key not in _INGEST_STAGE_CACHE:
-        stage = scratch.path("st27_stage", sf_dir)
-        e.filter(F.col("vec_id") % 97 == 1).write.mode("overwrite").parquet(
-            stage
-        )
-        _INGEST_STAGE_CACHE[key] = stage
-    stage = _INGEST_STAGE_CACHE[key]
-    schema = spark.read.parquet(stage).schema
-    stream = spark.readStream.schema(schema).parquet(stage)
+    # Stage the incoming slice once per process and sf: a real feed
+    # delivers files; the stream reads them with the staged frame's
+    # schema.
+    probes = e.filter(F.col("vec_id") % 97 == 1)
+    stage = _stage_once(
+        "st27_stage", sf_dir, lambda d: probes.write.mode("overwrite").parquet(d)
+    )
+    stream = spark.readStream.schema(probes.schema).parquet(stage)
     routed = (
         stream.select(F.col("vec_id").alias("probe_id"), cell.alias("cell"))
         .join(F.broadcast(idx), "cell", "left")
@@ -2063,7 +2039,7 @@ def st27_stream_ann_cell_route(spark: SparkSession, sf_dir: str) -> DataFrame:
     "map-side hash + one partial-agg sum per sink.",
 )
 def st28_dual_sink_fanout(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = _read_events_stream(spark, sf_dir)
+    events = _events_stream(spark, sf_dir)
     base = scratch.fresh("st28_")
     serving_dir = os.path.join(base, "serving")
     audit_dir = os.path.join(base, "audit")
@@ -2081,11 +2057,7 @@ def st28_dual_sink_fanout(spark: SparkSession, sf_dir: str) -> DataFrame:
         finally:
             batch_df.unpersist()
 
-    q = proj.writeStream.foreachBatch(fanout).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    _drain(proj.writeStream.foreachBatch(fanout))
 
     def digest(path: str, n_alias: str, d_alias: str) -> DataFrame:
         df = spark.read.parquet(path)
@@ -2153,7 +2125,7 @@ def st28_dual_sink_fanout(spark: SparkSession, sf_dir: str) -> DataFrame:
     "batch oracle over the drained fixture (the st01 contract).",
 )
 def st29_stream_ohlc_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = _read_events_stream(spark, sf_dir)
+    events = _events_stream(spark, sf_dir)
     keyed = events.select(
         "event_type",
         F.window("ts", "1 hour").alias("w"),
@@ -2226,25 +2198,11 @@ def st29_stream_ohlc_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
 def st30_offset_replay_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     import json
 
-    configure(spark)
     base = scratch.fresh("st30_")
-    src_dir = os.path.join(base, "src")
     ckpt_dir = os.path.join(base, "ckpt")
     out_dir = os.path.join(base, "out")
-    os.makedirs(src_dir)
     os.makedirs(out_dir)
-
-    batch = normalize_events_ts(
-        spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-    ).select("event_id", "event_type")
-    # One-pass 2-way split (round 11, guide §6) — the st11 pattern.
-    split_root = os.path.join(base, "split")
-    batch.withColumn("m", F.col("event_id") % 2).repartition(1).write.partitionBy(
-        "m"
-    ).parquet(split_root)
-    _promote(os.path.join(split_root, "m=0"), os.path.join(src_dir, "part1"))
-    part2_staging = os.path.join(split_root, "m=1")
-    schema = batch.schema
+    schema, src_dir, part2_staging = _parity_split(spark, sf_dir, base)
     manifest_path = os.path.join(out_dir, "_manifest.json")
 
     def idempotent_sink(batch_df: DataFrame, batch_id: int) -> None:
@@ -2264,19 +2222,14 @@ def st30_offset_replay_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
             json.dump({"batch_ids": sorted(ids)}, fh)
 
     def run_once(ckpt: str) -> None:
-        q = (
+        _drain(
             spark.readStream.schema(schema)
             .option("recursiveFileLookup", "true")
             .option("maxFilesPerTrigger", "1")
             .parquet(src_dir)
             .writeStream.foreachBatch(idempotent_sink)
             .option("checkpointLocation", ckpt)
-            .start()
         )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
 
     run_once(ckpt_dir)  # run 1: part1, >=1 committed batches unless empty
     # Simulate the producer crash window: sink committed batch n, but
@@ -2400,7 +2353,7 @@ from ..operators.aggregates import (  # noqa: E402  (q28f sketch helpers)
 def st31_stream_hll_registers(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    events = _read_events_stream(spark, sf_dir)
+    events = _events_stream(spark, sf_dir)
     h = "md5(CAST(user_id AS STRING))"
     rho = events.selectExpr(
         "user_id",
@@ -2423,9 +2376,8 @@ def st31_stream_hll_registers(
         .cast("long")
         .alias("registers_hit"),
     )
-    ex = (
-        spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-        .agg(F.countDistinct("user_id").cast("long").alias("exact_distinct"))
+    ex = load_table(spark, sf_dir, "events").agg(
+        F.countDistinct("user_id").cast("long").alias("exact_distinct")
     )
     est = F.lit(_HLL_ALPHA) * F.lit(_HLL_M * _HLL_M) / F.col("s")
     return ex.crossJoin(F.broadcast(agg)).select(

@@ -358,3 +358,21 @@ def test_prefixspan_support_monotonicity_and_singletons(spark):
     threshold = -(-n_users // 10)
     singles = {p: f for p, f in out.items() if ">" not in p}
     assert singles == {t: n for t, n in exact.items() if n >= threshold}
+
+
+def test_training_cache_released_when_the_fit_fails(spark, monkeypatch):
+    """ml13 and ml17 cache their training relation; a fit that raises
+    must still release it, as ml10, ml12 and ml14 do."""
+    from spark_ml_optimization_spark.ml import pipelines
+
+    from .conftest import SF_SMOKE
+
+    def failing_fit(estimator, data, attempts=3):
+        raise RuntimeError("fit failed")
+
+    spark.catalog.clearCache()
+    monkeypatch.setattr(pipelines, "_fit_retry", failing_fit)
+    for name in ("ml13_cv_parallelism_speedup", "ml17_one_vs_rest"):
+        with pytest.raises(RuntimeError, match="fit failed"):
+            all_queries()[name].fn(spark, SF_SMOKE)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

@@ -221,3 +221,69 @@ def test_memo_keys_only_in_session_module():
         if p.name != "session.py" and "applicationId" in p.read_text()
     ]
     assert not offenders, offenders
+
+
+def test_fixture_reads_only_through_sources_io():
+    """Package code reads a fixture table only through ``sources.io``
+    (``load_table``, or ``load_raw`` for the raw footer format), whose
+    schema cache infers each footer once per process.  A direct
+    ``read.parquet(`` / ``read_parquet(`` of a path built from ``sf_dir``
+    and a table name launched one footer-inference job per call."""
+    import pathlib
+
+    from spark_ml_optimization_spark.sources import TABLES
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / (
+        "spark_ml_optimization_spark"
+    )
+    call = re.compile(r"read[._]parquet\(")
+    table = re.compile(r"\b(?:%s)\b" % "|".join(TABLES))
+    offenders = []
+    for p in pkg.rglob("*.py"):
+        if p.relative_to(pkg).as_posix() == "sources/io.py":
+            continue
+        text = p.read_text()
+        for m in call.finditer(text):
+            depth, end = 1, m.end()
+            while depth and end < len(text):
+                depth += {"(": 1, ")": -1}.get(text[end], 0)
+                end += 1
+            args = text[m.end() : end]
+            if "sf_dir" in args and table.search(args):
+                line = text.count("\n", 0, m.start()) + 1
+                offenders.append(f"{p.relative_to(pkg)}:{line}")
+    assert not offenders, offenders
+
+
+def test_stream_queries_start_only_in_the_drain_loop():
+    """Every streaming query is started by ``stream_ops._drain``, which
+    stops it however the drain ends; st18's availableNow query, which
+    ends by itself, is the one other ``.start()`` in the package."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / (
+        "spark_ml_optimization_spark"
+    )
+    allowed = {"_drain", "st18_available_now_backfill"}
+    found = []
+
+    class Starts(ast.NodeVisitor):
+        def __init__(self, path):
+            self.path, self.stack = path, []
+
+        def visit_FunctionDef(self, node):
+            self.stack.append(node.name)
+            self.generic_visit(node)
+            self.stack.pop()
+
+        def visit_Call(self, node):
+            if isinstance(node.func, ast.Attribute) and node.func.attr == "start":
+                found.append((self.path, self.stack[-1] if self.stack else None))
+            self.generic_visit(node)
+
+    for p in pkg.rglob("*.py"):
+        Starts(str(p.relative_to(pkg))).visit(ast.parse(p.read_text()))
+    offenders = [f for f in found if f[1] not in allowed]
+    assert not offenders, offenders
+    assert sorted(fn for _, fn in found) == sorted(allowed)

@@ -269,3 +269,76 @@ def test_drift_monitor_counts_events_without_a_reference(spark, tmp_path):
     got = [r["n_events"] for r in rows]
     assert None not in got and sorted(got) == batch_rows, rows
     assert all(r["n_batches"] == 2 and r["psi_total"] is None for r in rows)
+
+
+def test_stage_once_leaves_only_a_complete_stage(tmp_path):
+    """A write that raises leaves nothing at the stage path, so the next
+    call writes the stage; once it exists, later calls reuse it without
+    calling the writer."""
+    import os
+
+    import pytest
+
+    from spark_ml_optimization_spark import scratch
+    from spark_ml_optimization_spark.streaming.stream_ops import _stage_once
+
+    sf_dir = str(tmp_path)
+    calls = []
+
+    def write(d, fail=False):
+        calls.append(d)
+        with open(os.path.join(d, "part-0.parquet"), "w") as fh:
+            fh.write("x")
+        if fail:
+            raise RuntimeError("write failed")
+
+    dst = scratch.path("stage_once_test", sf_dir)
+    with pytest.raises(RuntimeError, match="write failed"):
+        _stage_once("stage_once_test", sf_dir, lambda d: write(d, fail=True))
+    assert not os.path.exists(dst)
+    assert not os.path.exists(calls[0])  # the partial copy is removed
+    assert _stage_once("stage_once_test", sf_dir, write) == dst
+    assert os.listdir(dst) == ["part-0.parquet"]
+    assert _stage_once("stage_once_test", sf_dir, write) == dst
+    assert len(calls) == 2
+
+
+def test_stage_once_under_concurrent_callers(tmp_path):
+    """Threads that race to stage one input all get the same complete
+    stage, and every losing copy is removed."""
+    import os
+    import sys
+    import threading
+    import time
+    from concurrent.futures import ThreadPoolExecutor
+
+    from spark_ml_optimization_spark import scratch
+    from spark_ml_optimization_spark.streaming.stream_ops import _stage_once
+
+    sf_dir = str(tmp_path)
+
+    def write(d):
+        for i in range(3):
+            with open(os.path.join(d, f"part-{i}.parquet"), "w") as fh:
+                fh.write(threading.current_thread().name)
+            time.sleep(0.001)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        with ThreadPoolExecutor(max_workers=16) as pool:
+            futures = [
+                pool.submit(_stage_once, "stage_race_test", sf_dir, write)
+                for _ in range(32)
+            ]
+            got = {f.result(timeout=60) for f in futures}
+    finally:
+        sys.setswitchinterval(old)
+    dst = scratch.path("stage_race_test", sf_dir)
+    assert got == {dst}
+    files = sorted(os.listdir(dst))
+    assert files == [f"part-{i}.parquet" for i in range(3)]
+    writers = {open(os.path.join(dst, f)).read() for f in files}
+    assert len(writers) == 1  # one writer's complete copy, not a mix
+    root, name = os.path.split(dst)
+    assert [n for n in os.listdir(root) if n.startswith("stage_race_test")] == [name]
