@@ -234,9 +234,22 @@ def get_spark(app_name: str = "spark_ml_optimization_spark") -> SparkSession:
     # from the JVM's default of 1/64 of RAM spends the first queries of a
     # session in extra collections and resizes whose timing varies from
     # run to run (see CHANGES.md for the measured first-query times).
-    # Pages are still touched only as they are used.  JVM flags are
-    # start-time only; a driver-owned session is unaffected.
-    extra_jvm = ["-XX:+UseParallelGC", f"-Xms{heap_mb}m"]
+    # Pages are still touched only as they are used.
+    # One C1 and one C2 compiler thread (CICompilerCount=2; the HotSpot
+    # default on 4 cores is 3: one C1, two C2).  In local mode one JVM
+    # runs short queries one after another and its local[N] executors
+    # already use every core, so a second C2 thread mostly compiles
+    # methods that have stopped being hot by the time the compile lands.
+    # With one C2 thread the tiered policy drops those stale tasks and
+    # compiles queued methods at C1 tier 2 rather than the profiling
+    # tier 3; a method that stays hot still reaches C2, so peak code is
+    # unchanged.  Measured on 4 cores / 15 GB (see CHANGES.md): JFR C2
+    # compile time over perfbench build_heavy set-up plus one pass fell
+    # from 25-28 s to 17-19 s, and build_heavy setup_s won 10 of 10
+    # interleaved pairs, median 35.3 -> 29.4 s.  Other core counts are
+    # unmeasured.  JVM flags are start-time only; a driver-owned session
+    # is unaffected.
+    extra_jvm = ["-XX:+UseParallelGC", f"-Xms{heap_mb}m", "-XX:CICompilerCount=2"]
     if local_dir:
         try:
             os.makedirs(local_dir, exist_ok=True)

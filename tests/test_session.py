@@ -1,4 +1,5 @@
-"""session: the JVM launch sized to the host, scoped_conf, the one way
+"""session: the JVM launch sized to the host (heap, collector and
+compiler pool), scoped_conf, the one way
 package code changes session conf, and memo, the one audited
 cross-query artifact memo."""
 
@@ -54,6 +55,13 @@ def test_restores_when_the_body_raises(spark):
 def test_driver_jvm_runs_the_throughput_collector(spark):
     beans = spark._jvm.java.lang.management.ManagementFactory.getGarbageCollectorMXBeans()
     assert sorted(b.getName() for b in beans) == ["PS MarkSweep", "PS Scavenge"]
+
+
+def test_driver_jvm_runs_one_c1_and_one_c2_compiler_thread(spark):
+    jvm = spark._jvm
+    bean_cls = jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean")
+    diag = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(bean_cls)
+    assert diag.getVMOption("CICompilerCount").getValue() == "2"
 
 
 def test_driver_heap_fits_the_host(spark):

@@ -4,7 +4,10 @@
 NOT part of the driver contract (bench.py is) — this is the workbench:
 
     python tools/qtime.py q72c_minhash_portable qp5_dedup_funnel \
-        --repeat 3 --sf /root/testdata/sf0.1 --plan plans/r11/x_before.txt
+        --repeat 3 --plan-dir plans/r11 --plan-suffix before
+
+(`--sf` names the fixture directory; it defaults to $SPARK_GRAFT_SF_DIR,
+else the sf0.1 test fixtures.)
 
 Times each named query standalone with bench.py's `measure` (streams
 stopped, caches dropped and a full GC before each query, then best-of-N
